@@ -1,23 +1,22 @@
-"""Column-level HTML functions: the jsoup-style user API as Arrow-batched
-pandas UDFs.
-
-Each function compiles its CSS query once on the driver (broadcast with the
-closure; QueryParser caches per executor) and evaluates vectorized over
-Arrow batches — the Spark analogue of Element.select/text/attr
+"""Column-level HTML functions: the jsoup-style user API as Spark column
+functions — the Spark analogue of Element.select/text/attr
 (/root/reference/ksoup/src/com/fleeksoft/ksoup/nodes/Element.kt:459-499,
 Ksoup.kt:192-288 for metadata).
 
-These are the convenience path; the bulk pipeline uses
-operators.extract (mapInArrow) which avoids pandas Series overhead.
+Each function is one per-document body behind ``boundary.column_fn`` (an
+Arrow UDF: Arrow batches in and out, NULL read as the empty document). A
+CSS query is validated once on the driver and compiled per executor from
+the closure's string (QueryParser caches). These keep the sibling columns
+of a row; the bulk pipeline's row-emitting operators live in
+operators.extract.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     IntegerType,
     StringType,
     StructField,
@@ -30,34 +29,34 @@ from ..kernel import serialize
 from ..kernel import textops as tx
 from ..kernel.treebuilder import parse as _parse
 from ..kernel.xml import parse_xml as _parse_xml
+from ..operators.boundary import column_fn
+from ..operators.extract import SPANS_TYPE, spans_to_rows
+
+_STRINGS = ArrayType(StringType())
+_INTS = ArrayType(IntegerType())
+
+
+def _body(d: dom.Doc) -> int:
+    b = d.body()
+    return b if b != -1 else 0
 
 
 def html_text(col: Column | str) -> Column:
     """Element.text() of the document body."""
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            b = d.body()
-            out.append(tx.element_text(d, b if b != -1 else 0))
-        return pd.Series(out)
+    def text(h: str) -> str:
+        d = _parse(h)
+        return tx.element_text(d, _body(d))
 
-    return _f(col)
+    return column_fn(StringType(), text)(col)
 
 
 def html_whole_text(col: Column | str) -> Column:
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            b = d.body()
-            out.append(tx.whole_text(d, b if b != -1 else 0))
-        return pd.Series(out)
+    def whole_text(h: str) -> str:
+        d = _parse(h)
+        return tx.whole_text(d, _body(d))
 
-    return _f(col)
+    return column_fn(StringType(), whole_text)(col)
 
 
 def html_title(col: Column | str) -> Column:
@@ -66,27 +65,18 @@ def html_title(col: Column | str) -> Column:
     not pay for parsing their bodies (StreamParser.kt:45 semantics)."""
     from ..kernel.stream_parser import stream_title
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([stream_title(h or "") for h in s])
-
-    return _f(col)
+    return column_fn(StringType(), stream_title)(col)
 
 
 def html_select_text(col: Column | str, css: str) -> Column:
     """texts of elements matching the CSS query, in document order."""
-    ev = sel.parse_query(css)  # validate on driver
+    sel.parse_query(css)  # validate on driver
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append([tx.element_text(d, n) for n in sel.select(d, q)])
-        return pd.Series(out)
+    def texts(h: str) -> list[str]:
+        d = _parse(h)
+        return [tx.element_text(d, n) for n in sel.select(d, css)]
 
-    return _f(col)
+    return column_fn(_STRINGS, texts)(col)
 
 
 def html_css_selector(col: Column | str, css: str) -> Column:
@@ -94,31 +84,21 @@ def html_css_selector(col: Column | str, css: str) -> Column:
     the elements matching the query, in document order."""
     sel.parse_query(css)  # validate on driver
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append(sel.css_selectors(d, sel.select(d, q)))
-        return pd.Series(out)
+    def paths(h: str) -> list[str]:
+        d = _parse(h)
+        return sel.css_selectors(d, sel.select(d, css))
 
-    return _f(col)
+    return column_fn(_STRINGS, paths)(col)
 
 
 def html_select_own_text(col: Column | str, css: str) -> Column:
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append([tx.own_text(d, n) for n in sel.select(d, q)])
-        return pd.Series(out)
+    def own_texts(h: str) -> list[str]:
+        d = _parse(h)
+        return [tx.own_text(d, n) for n in sel.select(d, css)]
 
-    return _f(col)
+    return column_fn(_STRINGS, own_texts)(col)
 
 
 def html_select_attr(col: Column | str, css: str, attr: str,
@@ -129,52 +109,39 @@ def html_select_attr(col: Column | str, css: str, attr: str,
     returns "" there)."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            vals = []
-            for n in sel.select(d, q):
-                v = d.get_attr(n, attr)
-                if absolute and v:
-                    v = d.abs_url(n, attr) or v
-                if v is not None:
-                    vals.append(v)
-            out.append(vals)
-        return pd.Series(out)
+    def attrs(h: str) -> list[str]:
+        d = _parse(h)
+        vals = []
+        for n in sel.select(d, css):
+            v = d.get_attr(n, attr)
+            if absolute and v:
+                v = d.abs_url(n, attr) or v
+            if v is not None:
+                vals.append(v)
+        return vals
 
-    return _f(col)
+    return column_fn(_STRINGS, attrs)(col)
 
 
 def html_select_count(col: Column | str, css: str) -> Column:
     sel.parse_query(css)
 
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        return pd.Series([len(sel.select(_parse(h or ""), q)) for h in s])
+    def count(h: str) -> int:
+        return len(sel.select(_parse(h), css))
 
-    return _f(col)
+    return column_fn(IntegerType(), count)(col)
 
 
 def html_select_html(col: Column | str, css: str) -> Column:
     """outerHtml of matching elements."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            out.append(
-                [serialize.outer_html(d, n, pretty=False) for n in sel.select(d, q)]
-            )
-        return pd.Series(out)
+    def outer_htmls(h: str) -> list[str]:
+        d = _parse(h)
+        return [serialize.outer_html(d, n, pretty=False)
+                for n in sel.select(d, css)]
 
-    return _f(col)
+    return column_fn(_STRINGS, outer_htmls)(col)
 
 
 _META_SCHEMA = StructType(
@@ -220,66 +187,55 @@ def html_meta(col: Column | str, base_uri: str = "") -> Column:
             href = base_uri + href
         return href
 
-    @F.pandas_udf(_META_SCHEMA)
-    def _f(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for h in s:
-            d = _parse(h or "")
+    def metadata(h: str) -> dict:
+        d = _parse(h)
 
-            def meta(attr_val, key="name", content="content"):
-                n = sel.select_first(d, f'meta[{key}={attr_val}]')
-                return d.get_attr(n, content) if n != -1 else None
+        def meta(attr_val, key="name", content="content"):
+            n = sel.select_first(d, f'meta[{key}={attr_val}]')
+            return d.get_attr(n, content) if n != -1 else None
 
-            canonical = None
-            n = sel.select_first(d, 'link[rel=canonical]')
-            if n != -1:
-                canonical = d.get_attr(n, "href")
-            charset = None
-            n = sel.select_first(d, "meta[charset]")
-            if n != -1:
-                charset = d.get_attr(n, "charset")
-            rows.append(
-                {
-                    "title": tx.doc_title(d) or None,
-                    "meta_title": meta("title"),
-                    "description": meta("description"),
-                    "author": meta("author"),
-                    "og_title": meta("og:title", key="property"),
-                    "og_site_name": meta("og:site_name", key="property"),
-                    "og_type": meta("og:type", key="property"),
-                    "og_locale": meta("og:locale", key="property"),
-                    "og_description": meta("og:description", key="property"),
-                    "og_image": meta("og:image", key="property"),
-                    "og_url": meta("og:url", key="property"),
-                    "twitter_card": meta("twitter:card"),
-                    "twitter_title": meta("twitter:title"),
-                    "twitter_description": meta("twitter:description"),
-                    "twitter_image": meta("twitter:image"),
-                    "canonical": canonical,
-                    "favicon": _icon(d, "link[rel~=icon]"),
-                    "shortcut_icon": _icon(d, "link[rel~=shortcut icon]"),
-                    "charset": charset,
-                }
-            )
-        return pd.DataFrame(rows)
+        canonical = None
+        n = sel.select_first(d, 'link[rel=canonical]')
+        if n != -1:
+            canonical = d.get_attr(n, "href")
+        charset = None
+        n = sel.select_first(d, "meta[charset]")
+        if n != -1:
+            charset = d.get_attr(n, "charset")
+        return {
+            "title": tx.doc_title(d) or None,
+            "meta_title": meta("title"),
+            "description": meta("description"),
+            "author": meta("author"),
+            "og_title": meta("og:title", key="property"),
+            "og_site_name": meta("og:site_name", key="property"),
+            "og_type": meta("og:type", key="property"),
+            "og_locale": meta("og:locale", key="property"),
+            "og_description": meta("og:description", key="property"),
+            "og_image": meta("og:image", key="property"),
+            "og_url": meta("og:url", key="property"),
+            "twitter_card": meta("twitter:card"),
+            "twitter_title": meta("twitter:title"),
+            "twitter_description": meta("twitter:description"),
+            "twitter_image": meta("twitter:image"),
+            "canonical": canonical,
+            "favicon": _icon(d, "link[rel~=icon]"),
+            "shortcut_icon": _icon(d, "link[rel~=shortcut icon]"),
+            "charset": charset,
+        }
 
-    return _f(col)
+    return column_fn(_META_SCHEMA, metadata)(col)
 
 
 def xml_select_text(col: Column | str, css: str) -> Column:
     """XML-mode parse + select (Parser.xmlParser path)."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for x in s:
-            d = _parse_xml(x or "")
-            out.append([tx.element_text(d, n) for n in sel.select(d, q)])
-        return pd.Series(out)
+    def texts(x: str) -> list[str]:
+        d = _parse_xml(x)
+        return [tx.element_text(d, n) for n in sel.select(d, css)]
 
-    return _f(col)
+    return column_fn(_STRINGS, texts)(col)
 
 
 def html_links(col: Column | str, absolute: bool = True) -> Column:
@@ -290,22 +246,18 @@ def html_links(col: Column | str, absolute: bool = True) -> Column:
 def html_media_refs(col: Column | str) -> Column:
     """All media references: img[src], video[src]/source[src], object[data]."""
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query("img[src], video[src], video > source[src], object[data]")
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            vals = []
-            for n in sel.select(d, q):
-                attr = "data" if d.tag[n] == "object" else "src"
-                v = d.abs_url(n, attr) or d.get_attr(n, attr)
-                if v:
-                    vals.append(v)
-            out.append(vals)
-        return pd.Series(out)
+    def refs(h: str) -> list[str]:
+        d = _parse(h)
+        vals = []
+        for n in sel.select(d, "img[src], video[src], video > source[src], "
+                               "object[data]"):
+            attr = "data" if d.tag[n] == "object" else "src"
+            v = d.abs_url(n, attr) or d.get_attr(n, attr)
+            if v:
+                vals.append(v)
+        return vals
 
-    return _f(col)
+    return column_fn(_STRINGS, refs)(col)
 
 
 def html_clean(col: Column | str, preset: str = "basic") -> Column:
@@ -314,25 +266,15 @@ def html_clean(col: Column | str, preset: str = "basic") -> Column:
 
     assert preset in ("none", "simple_text", "basic", "basic_with_images",
                       "relaxed")
-
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        sl = getattr(Safelist, preset)()
-        return pd.Series([clean_html(h or "", sl) for h in s])
-
-    return _f(col)
+    sl = getattr(Safelist, preset)()
+    return column_fn(StringType(), lambda h: clean_html(h, sl))(col)
 
 
 def html_is_valid(col: Column | str, preset: str = "basic") -> Column:
     from ..kernel.safety import Safelist, is_valid_html
-    from pyspark.sql.types import BooleanType
 
-    @F.pandas_udf(BooleanType())
-    def _f(s: pd.Series) -> pd.Series:
-        sl = getattr(Safelist, preset)()
-        return pd.Series([is_valid_html(h or "", sl) for h in s])
-
-    return _f(col)
+    sl = getattr(Safelist, preset)()
+    return column_fn(BooleanType(), lambda h: is_valid_html(h, sl))(col)
 
 
 def html_main_text(col: Column | str, base_uri: str = "") -> Column:
@@ -340,19 +282,7 @@ def html_main_text(col: Column | str, base_uri: str = "") -> Column:
     strip chrome, pick the semantic/best-scored container, Element.text())."""
     from ..kernel.boilerplate import main_text
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([main_text(h or "", base_uri) for h in s])
-
-    return _f(col)
-
-
-_SPAN_SCHEMA = ArrayType(StructType([
-    StructField("kind", StringType()),
-    StructField("text", StringType()),
-    StructField("media_ref", StringType()),
-    StructField("offset", IntegerType()),
-]))
+    return column_fn(StringType(), lambda h: main_text(h, base_uri))(col)
 
 
 def html_main_spans(col: Column | str, base_uri: str = "") -> Column:
@@ -360,34 +290,19 @@ def html_main_spans(col: Column | str, base_uri: str = "") -> Column:
     the main container — media spans interleaved at their DOM positions."""
     from ..kernel.boilerplate import main_spans
 
-    @F.pandas_udf(_SPAN_SCHEMA)
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            out.append([
-                {"kind": k, "text": t, "media_ref": m, "offset": o}
-                for k, t, m, o in main_spans(h or "", base_uri)
-            ])
-        return pd.Series(out)
-
-    return _f(col)
+    return column_fn(SPANS_TYPE,
+                     lambda h: spans_to_rows(main_spans(h, base_uri)))(col)
 
 
 def _rewrite_udf(fn):
     """html-in → html-out rewrite wrapper (serializes body inner HTML)."""
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            fn(d)
-            b = d.body()
-            out.append(serialize.inner_html(d, b if b != -1 else 0,
-                                            pretty=False))
-        return pd.Series(out)
+    def rewrite(h: str) -> str:
+        d = _parse(h)
+        fn(d)
+        return serialize.inner_html(d, _body(d), pretty=False)
 
-    return _f
+    return column_fn(StringType(), rewrite)
 
 
 def html_remove(col: Column | str, css: str) -> Column:
@@ -441,26 +356,19 @@ def html_parse_errors(col: Column | str, max_errors: int = 100) -> Column:
     /root/reference/ksoup/src/com/fleeksoft/ksoup/parser/Parser.kt:92-107).
     The crawl-hygiene column: filter/inspect malformed documents at scale."""
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([
-            _parse(h or "", track_errors=max_errors).parse_errors for h in s
-        ])
+    def errors(h: str) -> list[str]:
+        return _parse(h, track_errors=max_errors).parse_errors
 
-    return _f(col)
+    return column_fn(_STRINGS, errors)(col)
 
 
 def html_parse_error_count(col: Column | str, max_errors: int = 10000) -> Column:
     """Number of parse errors per document (bounded by max_errors)."""
 
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([
-            len(_parse(h or "", track_errors=max_errors).parse_errors)
-            for h in s
-        ])
+    def error_count(h: str) -> int:
+        return len(_parse(h, track_errors=max_errors).parse_errors)
 
-    return _f(col)
+    return column_fn(IntegerType(), error_count)(col)
 
 
 def html_src_positions(col: Column | str, css: str) -> Column:
@@ -470,16 +378,11 @@ def html_src_positions(col: Column | str, css: str) -> Column:
     — the span -> source provenance column for training-data pipelines."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "", track_positions=True)
-            out.append([d.src_pos.get(n, -1) for n in sel.select(d, q)])
-        return pd.Series(out)
+    def positions(h: str) -> list[int]:
+        d = _parse(h, track_positions=True)
+        return [d.src_pos.get(n, -1) for n in sel.select(d, css)]
 
-    return _f(col)
+    return column_fn(_INTS, positions)(col)
 
 
 def html_src_ranges(col: Column | str, css: str) -> Column:
@@ -490,23 +393,17 @@ def html_src_ranges(col: Column | str, css: str) -> Column:
     match. Scalar-extractable with element_at for oracle checking."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "", track_positions=True)
-            m = sel.select_first(d, q)
-            if m is None or m < 0:
-                out.append([])
-                continue
-            r = dom.source_range(d, m) or (-1, -1)
-            e = dom.end_source_range(d, m) or (-1, -1)
-            ln, c = dom.line_col(d, r[0])
-            out.append([r[0], r[1], e[0], e[1], ln, c])
-        return pd.Series(out)
+    def ranges(h: str) -> list[int]:
+        d = _parse(h, track_positions=True)
+        m = sel.select_first(d, css)
+        if m is None or m < 0:
+            return []
+        r = dom.source_range(d, m) or (-1, -1)
+        e = dom.end_source_range(d, m) or (-1, -1)
+        ln, c = dom.line_col(d, r[0])
+        return [r[0], r[1], e[0], e[1], ln, c]
 
-    return _f(col)
+    return column_fn(_INTS, ranges)(col)
 
 
 def html_attr_src_range(col: Column | str, css: str, attr: str) -> Column:
@@ -515,18 +412,13 @@ def html_attr_src_range(col: Column | str, css: str, attr: str) -> Column:
     empty array when no match / untracked attribute."""
     sel.parse_query(css)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _f(s: pd.Series) -> pd.Series:
-        q = sel.parse_query(css)
-        out = []
-        for h in s:
-            d = _parse(h or "", track_positions=True)
-            m = sel.select_first(d, q)
-            ar = None if m is None or m < 0 else dom.attr_source_range(d, m, attr)
-            out.append(list(ar) if ar else [])
-        return pd.Series(out)
+    def attr_range(h: str) -> list[int]:
+        d = _parse(h, track_positions=True)
+        m = sel.select_first(d, css)
+        ar = None if m is None or m < 0 else dom.attr_source_range(d, m, attr)
+        return list(ar) if ar else []
 
-    return _f(col)
+    return column_fn(_INTS, attr_range)(col)
 
 
 def html_form_controls(col: Column | str) -> Column:
@@ -535,18 +427,12 @@ def html_form_controls(col: Column | str) -> Column:
     submittable descendants unioned with parse-time linked controls (the
     foster-parented / early-close cases), in association order."""
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for h in s:
-            d = _parse(h or "")
-            rows = []
-            forms = [n for n, _ in d.preorder(0)
-                     if d.kind[n] == dom.ELEMENT and d.tag[n] == "form"]
-            for fi, form in enumerate(forms):
-                for c in dom.form_elements(d, form):
-                    rows.append(f"{fi}:{d.tag[c]}:{d.get_attr(c, 'id') or ''}")
-            out.append(rows)
-        return pd.Series(out)
+    def controls(h: str) -> list[str]:
+        d = _parse(h)
+        forms = [n for n, _ in d.preorder(0)
+                 if d.kind[n] == dom.ELEMENT and d.tag[n] == "form"]
+        return [f"{fi}:{d.tag[c]}:{d.get_attr(c, 'id') or ''}"
+                for fi, form in enumerate(forms)
+                for c in dom.form_elements(d, form)]
 
-    return _f(col)
+    return column_fn(_STRINGS, controls)(col)

@@ -230,6 +230,15 @@ def _load():
     return _c
 
 
+def c_function(name: str):
+    """The C module's function ``name``, or None when the module is
+    unavailable (KSOUP_SPARK_NO_CTOK=1, no compiler, or a failed build).
+    Every C accelerator is looked up here; the Python implementation it
+    mirrors stays the semantics reference and the fallback."""
+    mod = _load()
+    return getattr(mod, name, None) if mod is not None else None
+
+
 _EOF = ("eof",)
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 import re
 from urllib.parse import urljoin
 
+from . import ctokenizer
 from . import tags as T
 
 _URL_CTL = re.compile(r"[\x00-\x1f]+")  # ascii 0-31, stripped from URLs
@@ -47,25 +48,6 @@ def resolve_url(base: str, rel: str) -> str:
         return urljoin(base, rel)
     except ValueError:
         return ""
-
-_C_TO_TABLE = False  # tri-state cache: False unset, None unavailable
-
-
-def _c_to_table_ints():
-    """The C integer-column builder (py_to_table_ints in _ctok_src.c) when
-    the ctok module is buildable; the pure-Python construction below stays
-    the semantics reference and the fallback."""
-    global _C_TO_TABLE
-    if _C_TO_TABLE is False:
-        try:
-            from .ctokenizer import _load
-
-            mod = _load()
-            _C_TO_TABLE = getattr(mod, "to_table_ints", None) \
-                if mod is not None else None
-        except Exception:
-            _C_TO_TABLE = None
-    return _C_TO_TABLE
 
 
 DOCUMENT = 0
@@ -287,7 +269,9 @@ class Doc:
                 k for k in text_columns if k != "text")
         kind = self.kind
         children = self.children
-        ctab = _c_to_table_ints()
+        # the C integer-column builder; the Python construction below stays
+        # the semantics reference and the fallback
+        ctab = ctokenizer.c_function("to_table_ints")
         if ctab is not None:
             (order, depth_of, par_col, sib, esib, first, nxt,
              send) = ctab(kind, self.parent, children)

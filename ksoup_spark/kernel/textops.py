@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 
 from . import dom
+from .ctokenizer import c_function
 from .dom import Doc
 from .tags import BLOCK_TAGS, PRESERVE_WS_TAGS, format_as_block
 
@@ -37,35 +38,13 @@ _WS_RUN = re.compile("[ \t\n\f\r\u00a0]+")
 _INVIS_RE = re.compile("[\u200b\u00ad]")
 
 
-def _c_norm_ws():
-    """The C norm_ws accelerator when the ctok module is buildable (same
-    cached .so as the tokenizer), else None. Resolved once at import; the
-    Python regex pair below stays the semantics reference and the fallback
-    (lone-surrogate strings can't take the UTF-8 C path)."""
-    try:
-        from .ctokenizer import _load
-
-        mod = _load()
-        return getattr(mod, "norm_ws", None) if mod is not None else None
-    except Exception:
-        return None
+# C accelerators (same .so as the tokenizer); the Python code below stays
+# the semantics reference and the fallback (lone-surrogate strings can't
+# take the UTF-8 C path)
+_cnorm = c_function("norm_ws")
+_ctext = c_function("element_text")
 
 
-_cnorm = _c_norm_ws()
-
-
-def _c_element_text():
-    """The C element_text twin (same .so); None when unbuildable."""
-    try:
-        from .ctokenizer import _load
-
-        mod = _load()
-        return getattr(mod, "element_text", None) if mod is not None else None
-    except Exception:
-        return None
-
-
-_ctext = _c_element_text()
 MEDIA_KIND = {"img": "image", "video": "video", "object": "object"}
 _MEDIA_REF_ATTR = {"img": "src", "video": "src", "object": "data"}
 
@@ -335,20 +314,7 @@ def doc_title(doc: Doc) -> str:
 # span emission (the flagship extraction operator)
 # ---------------------------------------------------------------------------
 
-def _c_extract_spans():
-    """The C span extractor when the ctok module is buildable, else None.
-    Same .so as the tokenizer; the Python DFS below stays the semantics
-    reference and the fallback (lone-surrogate text can't view as UTF-8)."""
-    try:
-        from .ctokenizer import _load
-
-        mod = _load()
-        return getattr(mod, "extract_spans", None) if mod is not None else None
-    except Exception:
-        return None
-
-
-_cspans = _c_extract_spans()
+_cspans = c_function("extract_spans")
 
 
 def extract_spans(doc: Doc, root: int | None = None) -> list[tuple]:

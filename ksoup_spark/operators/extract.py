@@ -3,12 +3,12 @@ and HTML -> exploded node table.
 
 Physical plan (SURVEY.md §4): read -> salted repartition on hash(doc_id)
 (defuses giant-document skew by scattering rows uniformly; one doc is one
-row, so skew is row-size skew, not key skew) -> mapInArrow(extract kernel)
--> columnar spans. No per-row Python at the Spark boundary: the kernel
-receives Arrow record batches and returns Arrow record batches; the
-per-document parse loop runs inside the batch (the same document-at-a-time
-model as the reference, Parser.kt:13-14 — parallelism lives BETWEEN
-documents).
+row, so skew is row-size skew, not key skew) -> extract kernel (a
+mapInArrow behind boundary.map_docs) -> columnar spans. No per-row Python
+at the Spark boundary: the kernel receives Arrow record batches and returns
+Arrow record batches; the per-document parse loop runs inside the batch
+(the same document-at-a-time model as the reference, Parser.kt:13-14 —
+parallelism lives BETWEEN documents).
 
 At 100 TB scale: extraction is embarrassingly parallel (no shuffle needed
 beyond the optional salting pass), the parse kernel is CPU-bound per core,
@@ -18,9 +18,6 @@ so a multi-MB document cannot balloon executor memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -35,6 +32,7 @@ from pyspark.sql.types import (
 from ..kernel import dom
 from ..kernel.textops import extract_spans as _kernel_extract_spans
 from ..kernel.treebuilder import parse as _parse
+from .boundary import map_docs
 
 SPAN_STRUCT = StructType(
     [
@@ -127,31 +125,8 @@ def extract_spans_df(docs: DataFrame, repartition: int | None = None) -> DataFra
     docs = docs.select("doc_id", "spans")
     if repartition:
         docs = salted_repartition(docs, repartition)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arrow_spans_type = pa.list_(
-            pa.struct(
-                [
-                    ("kind", pa.string()),
-                    ("text", pa.string()),
-                    ("media_ref", pa.string()),
-                    ("offset", pa.int32()),
-                ]
-            )
-        )
-        for batch in batches:
-            ids = batch.column(0)
-            in_spans = batch.column(1).to_pylist()
-            out = [
-                extract_spans_from_html(assemble_html(s or []))
-                for s in in_spans
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=arrow_spans_type)],
-                names=["doc_id", "spans"],
-            )
-
-    return docs.mapInArrow(kernel, SPANS_SCHEMA)
+    return map_docs(docs, SPANS_SCHEMA,
+                    lambda s: extract_spans_from_html(assemble_html(s)))
 
 
 def extract_spans_from_html_df(docs: DataFrame, html_col: str = "html",
@@ -162,28 +137,7 @@ def extract_spans_from_html_df(docs: DataFrame, html_col: str = "html",
                        F.col(html_col).alias("html"))
     if repartition:
         docs = salted_repartition(docs, repartition)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arrow_spans_type = pa.list_(
-            pa.struct(
-                [
-                    ("kind", pa.string()),
-                    ("text", pa.string()),
-                    ("media_ref", pa.string()),
-                    ("offset", pa.int32()),
-                ]
-            )
-        )
-        for batch in batches:
-            ids = batch.column(0)
-            htmls = batch.column(1).to_pylist()
-            out = [extract_spans_from_html(h or "") for h in htmls]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=arrow_spans_type)],
-                names=["doc_id", "spans"],
-            )
-
-    return docs.mapInArrow(kernel, SPANS_SCHEMA)
+    return map_docs(docs, SPANS_SCHEMA, extract_spans_from_html)
 
 
 _TEXT_COLUMN_NAMES = {"text": "elem_text", "own": "elem_own_text",
@@ -217,6 +171,8 @@ def node_table_df(docs: DataFrame, html_col: str = "html",
     plain column predicate. Opt-in because the rewrite changes tree shape
     for EVERY selector evaluated over the table — exactly the reference's
     own semantics, where a :matchText query mutates the document."""
+    from ..kernel.selector import prepare_match_text
+
     docs = docs.select(F.col(id_col).cast("string").alias("doc_id"),
                        F.col(html_col).alias("html"))
     tcols = tuple(dict.fromkeys(
@@ -226,54 +182,16 @@ def node_table_df(docs: DataFrame, html_col: str = "html",
     if match_text:
         extra_fields.append(StructField("pseudo", IntegerType()))
     schema = StructType(NODE_TABLE_SCHEMA.fields + extra_fields)
-    copy_keys = ("node_id", "parent_id", "depth", "kind", "tag",
-                 "ns", "sibling_index", "elem_sibling_index",
-                 "first_child", "next_sibling", "subtree_end", "text")
-    copy_keys = copy_keys + text_names
-    if match_text:
-        copy_keys = copy_keys + ("pseudo",)
+    out_keys = schema.fieldNames()[1:]
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..kernel.selector import prepare_match_text
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in schema.fields}
-            for did, h in zip(ids, htmls):
-                doc = _parse(h or "")
-                if match_text:
-                    prepare_match_text(doc)
-                t = doc.to_table(text_columns=tcols,
-                                 include_pseudo=match_text)
-                n = len(t["node_id"])
-                cols["doc_id"].extend([did] * n)
-                for key in copy_keys:
-                    cols[key].extend(t[key])
-                cols["attrs"].extend(t["attrs"])
-            arrays = [
-                pa.array(cols["doc_id"], type=pa.string()),
-                pa.array(cols["node_id"], type=pa.int32()),
-                pa.array(cols["parent_id"], type=pa.int32()),
-                pa.array(cols["depth"], type=pa.int32()),
-                pa.array(cols["kind"], type=pa.int32()),
-                pa.array(cols["tag"], type=pa.string()),
-                pa.array(cols["ns"], type=pa.int32()),
-                pa.array(cols["sibling_index"], type=pa.int32()),
-                pa.array(cols["elem_sibling_index"], type=pa.int32()),
-                pa.array(cols["first_child"], type=pa.int32()),
-                pa.array(cols["next_sibling"], type=pa.int32()),
-                pa.array(cols["subtree_end"], type=pa.int32()),
-                pa.array(cols["text"], type=pa.string()),
-                pa.array(cols["attrs"], type=pa.map_(pa.string(), pa.string())),
-            ]
-            for n_ in text_names:
-                arrays.append(pa.array(cols[n_], type=pa.string()))
-            if match_text:
-                arrays.append(pa.array(cols["pseudo"], type=pa.int32()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in schema.fields])
+    def table(h: str) -> list:
+        doc = _parse(h)
+        if match_text:
+            prepare_match_text(doc)
+        t = doc.to_table(text_columns=tcols, include_pseudo=match_text)
+        return [t[k] for k in out_keys]
 
-    return docs.mapInArrow(kernel, schema)
+    return map_docs(docs, schema, table, explode=True)
 
 
 # node-kind codes re-exported for DataFrame-side filters
@@ -303,35 +221,11 @@ def extract_spans_from_bytes_df(docs: DataFrame, bytes_col: str = "content",
     if charset_col:
         cols.append(F.col(charset_col).alias("charset"))
     docs = docs.select(*cols)
-    has_hint = charset_col is not None
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arrow_spans_type = pa.list_(
-            pa.struct(
-                [
-                    ("kind", pa.string()),
-                    ("text", pa.string()),
-                    ("media_ref", pa.string()),
-                    ("offset", pa.int32()),
-                ]
-            )
-        )
-        for batch in batches:
-            ids = batch.column(0)
-            payloads = batch.column(1).to_pylist()
-            hints = batch.column(2).to_pylist() if has_hint else [None] * len(payloads)
-            out = [
-                extract_spans_from_html(
-                    decode_html_bytes(b or b"", h) if b is not None else ""
-                )
-                for b, h in zip(payloads, hints)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=arrow_spans_type)],
-                names=["doc_id", "spans"],
-            )
+    def spans(b: bytes, hint: str | None = None) -> list[dict]:
+        return extract_spans_from_html(decode_html_bytes(b, hint))
 
-    return docs.mapInArrow(kernel, SPANS_SCHEMA)
+    return map_docs(docs, SPANS_SCHEMA, spans)
 
 
 SELECTED_SCHEMA = StructType(
@@ -356,38 +250,17 @@ def select_elements_df(docs: DataFrame, css: str, html_col: str = "html",
     """
     from ..kernel import selector as _sel
     from ..kernel import textops as _tx
-    from ..kernel.treebuilder import parse as _p
 
     _sel.parse_query(css)  # validate on driver
     docs = docs.select(F.col(id_col).cast("string").alias("doc_id"),
                        F.col(html_col).alias("html"))
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        q = _sel.parse_query(css)
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            out = {k: [] for k in
-                   ("doc_id", "match_index", "tag", "text", "own_text", "attrs")}
-            for did, h in zip(ids, htmls):
-                d = _p(h or "")
-                for mi, node in enumerate(_sel.select(d, q)):
-                    out["doc_id"].append(did)
-                    out["match_index"].append(mi)
-                    out["tag"].append(d.tag[node])
-                    out["text"].append(_tx.element_text(d, node))
-                    out["own_text"].append(_tx.own_text(d, node))
-                    out["attrs"].append(d.attrs[node])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["doc_id"], type=pa.string()),
-                    pa.array(out["match_index"], type=pa.int32()),
-                    pa.array(out["tag"], type=pa.string()),
-                    pa.array(out["text"], type=pa.string()),
-                    pa.array(out["own_text"], type=pa.string()),
-                    pa.array(out["attrs"], type=pa.map_(pa.string(), pa.string())),
-                ],
-                names=["doc_id", "match_index", "tag", "text", "own_text", "attrs"],
-            )
+    def matches(h: str) -> tuple:
+        d = _parse(h)
+        nodes = _sel.select(d, css)
+        return (range(len(nodes)), [d.tag[n] for n in nodes],
+                [_tx.element_text(d, n) for n in nodes],
+                [_tx.own_text(d, n) for n in nodes],
+                [d.attrs[n] for n in nodes])
 
-    return docs.mapInArrow(kernel, SELECTED_SCHEMA)
+    return map_docs(docs, SELECTED_SCHEMA, matches, explode=True)

@@ -1,10 +1,10 @@
 """Multimodal column operators: opaque binary media + typed metadata.
 
 Treats image/audio/video payloads as binary columns with a typed metadata
-struct, processed via mapInPandas (Arrow-batched). Container-HEADER decode
-is REAL for PNG/GIF/JPEG/BMP/WEBP/TIFF/ICO/WAV/FLAC/MP3/OGG/MP4/AVI/
-MKV-WebM (``_parse_real`` — pure byte parsing: fixed-offset headers and
-TIFF IFD walks for the images, stdlib ``wave`` for PCM WAV, FLAC
+struct, processed per payload behind ``boundary.map_docs`` (Arrow-batched).
+Container-HEADER decode is REAL for PNG/GIF/JPEG/BMP/WEBP/TIFF/ICO/WAV/
+FLAC/MP3/OGG/MP4/AVI/MKV-WebM (``_parse_real`` — pure byte parsing:
+fixed-offset headers and TIFF IFD walks for the images, stdlib ``wave`` for PCM WAV, FLAC
 STREAMINFO bit unpacking, an MPEG Layer III frame-header walk for MP3
 duration, an Ogg page walk reading Vorbis/Opus granule positions, the
 RIFF ``avih`` main header for AVI, an EBML walk to Info/Tracks for
@@ -31,9 +31,7 @@ joins against span tables (media_ref) co-locate.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -46,6 +44,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .boundary import map_docs
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -583,47 +583,28 @@ def media_metadata(df: DataFrame, id_col: str = "media_id",
     df = df.select(F.col(id_col).alias("media_id"),
                    F.col(payload_col).alias("payload"))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(data or b"")
-                meta = _decode_payload(data, strict)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "kind": meta["kind"],
-                        "n_bytes": len(data),
-                        "format": meta["format"],
-                        "width": meta["width"],
-                        "height": meta["height"],
-                        "duration_ms": meta["duration_ms"],
-                        "sha256": hashlib.sha256(data).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_META_SCHEMA])
+    def metadata(data: bytes) -> tuple:
+        meta = _decode_payload(data, strict)
+        return (meta["kind"], len(data), meta["format"], meta["width"],
+                meta["height"], meta["duration_ms"],
+                hashlib.sha256(data).hexdigest())
 
-    return df.mapInPandas(kernel, MEDIA_META_SCHEMA)
+    return map_docs(df, MEDIA_META_SCHEMA, metadata)
 
 
 def media_features(df: DataFrame, dim: int = 16, id_col: str = "media_id",
                    payload_col: str = "payload") -> DataFrame:
     """binary payload -> deterministic feature vector (stubbed extractor:
     hash-derived; a real one plugs a vision/audio model into the same
-    mapInPandas shape)."""
+    per-payload function)."""
     df = df.select(F.col(id_col).alias("media_id"),
                    F.col(payload_col).alias("payload"))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf["media_id"], pdf["payload"]):
-                h = hashlib.sha256(bytes(data or b"")).digest()
-                vec = [(h[i % 32] / 127.5) - 1.0 for i in range(dim)]
-                rows.append({"media_id": mid, "features": vec})
-            yield pd.DataFrame(rows, columns=["media_id", "features"])
+    def features(data: bytes) -> list[float]:
+        h = hashlib.sha256(data).digest()
+        return [(h[i % 32] / 127.5) - 1.0 for i in range(dim)]
 
-    return df.mapInPandas(kernel, FEATURE_SCHEMA)
+    return map_docs(df, FEATURE_SCHEMA, features)
 
 
 def sample_frames(df: DataFrame, every_n_bytes: int = 4096,
@@ -634,24 +615,12 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 4096,
     df = df.select(F.col(id_col).alias("media_id"),
                    F.col(payload_col).alias("payload"))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(data or b"")
-                for fi in range(min(max_frames,
-                                    max(1, len(data) // every_n_bytes))):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_index": fi,
-                            "frame": data[fi * every_n_bytes:
-                                          (fi + 1) * every_n_bytes],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_index", "frame"])
+    def frames(data: bytes) -> tuple:
+        n = min(max_frames, max(1, len(data) // every_n_bytes))
+        return (range(n), [data[fi * every_n_bytes:(fi + 1) * every_n_bytes]
+                           for fi in range(n)])
 
-    return df.mapInPandas(kernel, FRAME_SCHEMA)
+    return map_docs(df, FRAME_SCHEMA, frames, explode=True)
 
 
 def synth_media_table(spark, n: int = 64) -> DataFrame:
@@ -694,18 +663,15 @@ def pdf_layout(df: DataFrame, id_col: str = "media_id",
     yield no rows (or raise under strict=True)."""
     from ..kernel.pdf import parse_pdf_layout
 
+    names = PDF_LAYOUT_SCHEMA.fieldNames()[1:]
     df = df.select(F.col(id_col).alias("media_id"),
                    F.col(payload_col).alias("payload"))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf["media_id"], pdf["payload"]):
-                for blk in parse_pdf_layout(bytes(data or b""), strict):
-                    rows.append({"media_id": mid, **blk})
-            yield pd.DataFrame(rows, columns=[f.name for f in PDF_LAYOUT_SCHEMA])
+    def blocks(data: bytes) -> list:
+        blks = parse_pdf_layout(data, strict)
+        return [[b[k] for b in blks] for k in names]
 
-    return df.mapInPandas(kernel, PDF_LAYOUT_SCHEMA)
+    return map_docs(df, PDF_LAYOUT_SCHEMA, blocks, explode=True)
 
 
 def enrich_media_spans(spans_df: DataFrame, media_df: DataFrame,
@@ -723,7 +689,7 @@ def enrich_media_spans(spans_df: DataFrame, media_df: DataFrame,
 
     Plan shape: explode only the media spans (text spans are filtered
     BEFORE the generate, so the explode is bounded by media density, not
-    span count), decode metadata once per media row (mapInPandas — the
+    span count), decode metadata once per media row (``media_metadata`` — the
     pure-byte header parsers above), then one equi-join on the media id.
     At 100 TB the media table is the smaller side in bytes-of-metadata
     (payloads are pruned before the join: metadata is projected first), so

@@ -13,8 +13,8 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # Records per Arrow batch entering Python workers. 512 is the measured
-# framing knee on the bench corpus (jobs/batch_probe.py: 64/128/256/1024/2048
-# all slower); it stays a giant-document guard — 512 x a pathological 0.5 MB
+# framing knee on the bench corpus (PLANS.md, "Lever (1) executed":
+# 64/128/256/1024/2048 all slower); it stays a giant-document guard — 512 x a pathological 0.5 MB
 # doc bounds a batch at ~256 MB, within a 4 GB/thread executor budget, and
 # the salted repartition spreads giant docs across partitions anyway.
 DEFAULT_ARROW_BATCH = 512

@@ -10,16 +10,19 @@ by the same salted repartition as the batch path.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import SPANS_SCHEMA, extract_spans_df
-
-DOCS_SCHEMA = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+from ..operators.boundary import column_fn
+from ..operators.extract import (
+    SPANS_SCHEMA,
+    SPANS_TYPE,
+    assemble_html,
+    extract_spans_df,
+    extract_spans_from_html,
 )
+
+DOCS_SCHEMA = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                        for f in SPANS_SCHEMA.fields)
 
 
 def read_docs_stream(spark: SparkSession, path: str,
@@ -61,23 +64,8 @@ def start_extraction_stream(
 def extract_spans_col():
     """Column-level extraction UDF (spans-in -> spans-out), for plans that
     must keep sibling columns (e.g. event time in streaming) without a join."""
-    from pyspark.sql import functions as F
-
-    from ..operators.extract import SPANS_TYPE, assemble_html, \
-        extract_spans_from_html
-
-    @F.pandas_udf(SPANS_TYPE)
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                extract_spans_from_html(
-                    assemble_html(list(v) if v is not None else [])
-                )
-                for v in s
-            ]
-        )
-
-    return _f
+    return column_fn(SPANS_TYPE,
+                     lambda s: extract_spans_from_html(assemble_html(s)))
 
 
 def span_metrics_stream(docs_stream: DataFrame,

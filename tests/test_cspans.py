@@ -2,8 +2,8 @@
 
 The C mirror (py_extract_spans in _ctok_src.c) must emit byte-identical span
 sequences to textops._extract_spans_py on every document shape the corpus and
-the reference tests exercise — media interleave, pre depth rules, block
-boundary spaces, CDATA, entities, deep nesting, tag soup.
+the fuzz campaign's tag soup exercise — media interleave, pre depth rules,
+block boundary spaces, CDATA, entities, deep nesting.
 """
 
 from __future__ import annotations
@@ -11,10 +11,12 @@ from __future__ import annotations
 import pytest
 
 from ksoup_spark.kernel import dom
-from ksoup_spark.kernel.textops import _cspans, _extract_spans_py, extract_spans
+from ksoup_spark.kernel.ctokenizer import c_function
+from ksoup_spark.kernel.textops import _extract_spans_py, extract_spans
 from ksoup_spark.kernel.treebuilder import parse
 
-pytestmark = pytest.mark.skipif(_cspans is None, reason="C module unavailable")
+pytestmark = pytest.mark.skipif(c_function("extract_spans") is None,
+                                reason="C module unavailable")
 
 
 def both(html: str):
@@ -95,32 +97,16 @@ def test_lone_surrogate_falls_back():
     assert any("surrogate" in (s[1] or "") for s in spans)
 
 
-def test_reference_page_parity():
-    import gzip
-    import pathlib
-
-    fx = pathlib.Path("/root/reference/ksoup-test/testResources")
-    pages = [fx / "test.txt"] + sorted((fx / "htmltests").glob("*.html")) \
-        + sorted((fx / "htmltests").glob("*.html.gz"))
-    ran = 0
-    for p in pages:
-        if not p.exists():
-            continue
-        raw = p.read_bytes()
-        if p.name.endswith(".gz"):
-            try:
-                raw = gzip.decompress(raw)
-            except OSError:
-                continue  # fake-gzip fixture
-        both(raw.decode("utf-8", "replace"))
-        ran += 1
-    assert ran > 0
+def test_corpus_page_parity(corpus_pages, soup_pages):
+    assert len(corpus_pages) >= 500 and len(soup_pages) >= 300
+    for html in corpus_pages + soup_pages:
+        both(html)
 
 
 def test_element_text_parity():
     from ksoup_spark.kernel import textops as T
 
-    if T._ctext is None:
+    if c_function("element_text") is None:
         pytest.skip("C module unavailable")
     for html in CASES:
         d = parse(html)
@@ -130,24 +116,15 @@ def test_element_text_parity():
                     T._element_text_py(d, node), (html[:80], node)
 
 
-def test_element_text_reference_page_parity():
-    import gzip
-    import pathlib
-
+def test_element_text_corpus_page_parity(corpus_pages, soup_pages):
     from ksoup_spark.kernel import textops as T
 
-    if T._ctext is None:
+    if c_function("element_text") is None:
         pytest.skip("C module unavailable")
-    fx = pathlib.Path("/root/reference/ksoup-test/testResources")
-    pages = [fx / "test.txt"] + sorted((fx / "htmltests").glob("*.html"))
-    ran = 0
-    for p in pages:
-        if not p.exists():
-            continue
-        d = parse(p.read_bytes().decode("utf-8", "replace"))
+    assert len(corpus_pages) >= 500 and len(soup_pages) >= 300
+    for html in corpus_pages + soup_pages:
+        d = parse(html)
         for node in range(len(d.kind)):
             if d.kind[node] == dom.ELEMENT:
                 assert T.element_text(d, node) == \
-                    T._element_text_py(d, node), (p.name, node)
-        ran += 1
-    assert ran > 0
+                    T._element_text_py(d, node), (html[:80], node)

@@ -11,7 +11,7 @@ import random
 
 import pytest
 
-from ksoup_spark.kernel import dom, mutate, selector as S
+from ksoup_spark.kernel import ctokenizer, mutate, selector as S
 from ksoup_spark.kernel import treebuilder as tb
 
 _BITS = ["<div>", "</div>", "<p>", "<span class=x>", "</span>", "text ",
@@ -26,15 +26,19 @@ def _soup(rng: random.Random, n: int) -> str:
 
 
 def _py_table(d, include_elem_text=False):
-    saved = dom._C_TO_TABLE
-    dom._C_TO_TABLE = None
+    """to_table with the C accessor reporting the module unavailable."""
+    looked_up = []
+    saved = ctokenizer.c_function
+    ctokenizer.c_function = looked_up.append  # records the name, returns None
     try:
-        return d.to_table(include_elem_text=include_elem_text)
+        table = d.to_table(include_elem_text=include_elem_text)
     finally:
-        dom._C_TO_TABLE = saved
+        ctokenizer.c_function = saved
+    assert "to_table_ints" in looked_up
+    return table
 
 
-@pytest.mark.skipif(dom._c_to_table_ints() is None,
+@pytest.mark.skipif(ctokenizer.c_function("to_table_ints") is None,
                     reason="C extension not buildable here")
 def test_to_table_c_parity_on_tag_soup():
     rng = random.Random(20260817)
@@ -45,7 +49,7 @@ def test_to_table_c_parity_on_tag_soup():
             _py_table(d, include_elem_text=True), html[:120]
 
 
-@pytest.mark.skipif(dom._c_to_table_ints() is None,
+@pytest.mark.skipif(ctokenizer.c_function("to_table_ints") is None,
                     reason="C extension not buildable here")
 def test_to_table_c_parity_after_mutation():
     d = tb.parse("<div><p id=a>1</p><p id=b>2</p><span>3</span></div>")
@@ -54,7 +58,7 @@ def test_to_table_c_parity_after_mutation():
     assert d.to_table() == _py_table(d)
 
 
-@pytest.mark.skipif(dom._c_to_table_ints() is None,
+@pytest.mark.skipif(ctokenizer.c_function("to_table_ints") is None,
                     reason="C extension not buildable here")
 def test_to_table_c_parity_empty_and_deep():
     for html in ("", "<p>solo", "<div>" * 80 + "x" + "</div>" * 80):
