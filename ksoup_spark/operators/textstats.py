@@ -447,8 +447,9 @@ def pii_scrub(df: DataFrame, text_col: str = "text",
 
 def pii_scrub_sql(table: str = "documents", text_expr: str = "text") -> str:
     """DuckDB oracle twin of pii_scrub (same patterns, same scrub order;
-    RE2 and Java regex agree on this pattern subset)."""
-    em, ip, ph = (p for _, p, _ in PII_PATTERNS)
+    RE2 and Java regex agree on this pattern subset). Patterns are SQL
+    string literals, so any ' in them is doubled."""
+    em, ip, ph = (p.replace("'", "''") for _, p, _ in PII_PATTERNS)
     return f"""
 WITH t0 AS (SELECT doc_id, {text_expr} AS t FROM {table}),
 t1 AS (SELECT doc_id,

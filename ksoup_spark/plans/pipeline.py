@@ -2,9 +2,17 @@
 
 North-rule contract: the corpus is processed in deterministic logical
 partitions (pmod(xxhash64(doc_id), P)); each completed partition appends a
-metrics row (lineage: partition id, doc/span/byte counts, wall time,
-run id). A rerun anti-joins the metrics table and processes only missing
-partitions — a crashed 100 TB job resumes where it stopped.
+metrics row (lineage: partition id, doc/span/char/media counts, wall time,
+run id). A rerun reads the metrics table and processes only the partitions
+it has no row for — a crashed 100 TB job resumes where it stopped.
+
+One pass is one write job plus one small commit append. The kernel emits
+per-doc counts next to its spans; an ``Observation`` on the frame being
+written sums them per partition while the spans files are written, and the
+driver builds the commit rows from those sums (per-file statistics gathered
+at write time and committed in the log record, as Delta Lake does). Nothing
+re-reads the written files, and the todo list comes from the metrics table
+alone, never from a job over the input.
 
 Storage is parquet directories (an Iceberg catalog slots in by swapping
 ``format("parquet")`` for ``format("iceberg")``; the sandbox has no Iceberg
@@ -17,7 +25,8 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -27,7 +36,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.extract import extract_spans_df
+from ..operators.boundary import map_docs
+from ..operators.extract import (
+    SPANS_SCHEMA,
+    assemble_html,
+    extract_spans_from_html,
+)
 
 METRICS_SCHEMA = StructType(
     [
@@ -42,6 +56,23 @@ METRICS_SCHEMA = StructType(
     ]
 )
 
+# per-doc counts the kernel emits next to `spans`; summed per partition at
+# write time and dropped before the write
+COUNTS = ("n_spans", "n_text_chars", "n_media")
+COUNTED_SPANS_SCHEMA = StructType(
+    SPANS_SCHEMA.fields + [StructField(c, LongType()) for c in COUNTS]
+)
+
+
+def extract_counted_spans(spans: list) -> tuple:
+    """One doc's output spans plus the counts its commit row sums:
+    spans, code points of non-NULL text (Spark's ``length``), and spans
+    whose kind is not "text"."""
+    out = extract_spans_from_html(assemble_html(spans))
+    n_chars = sum(len(s["text"]) for s in out if s["text"] is not None)
+    n_media = sum(s["kind"] != "text" for s in out)
+    return out, len(out), n_chars, n_media
+
 
 def with_part(docs: DataFrame, num_parts: int) -> DataFrame:
     """Deterministic logical partition id from the doc id (salted hash)."""
@@ -50,12 +81,17 @@ def with_part(docs: DataFrame, num_parts: int) -> DataFrame:
     )
 
 
-def completed_parts(spark: SparkSession, metrics_path: str) -> DataFrame:
+def completed_parts(spark: SparkSession, metrics_path: str) -> set[int]:
+    """Partitions with a commit row. A missing metrics table means none;
+    an unreadable one raises rather than redoing every partition."""
     try:
-        return spark.read.schema(METRICS_SCHEMA).parquet(metrics_path) \
-            .select("part").distinct()
-    except Exception:
-        return spark.createDataFrame([], "part long")
+        rows = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path) \
+            .select("part").collect()
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return set()
+    return {r["part"] for r in rows}
 
 
 def run_extraction_pipeline(
@@ -68,9 +104,14 @@ def run_extraction_pipeline(
 ) -> dict:
     """Extract spans for all not-yet-completed partitions; returns a summary.
 
-    Each batch of partitions is one atomic unit: spans written (partitioned
-    by `part`), then the metrics rows appended. Killing the job between
-    batches loses at most the in-flight batch, which the next run redoes.
+    The todo list is ``range(num_parts)`` minus the partitions the metrics
+    table holds. Each batch of partitions is one atomic unit: spans written
+    (partitioned by `part`) while an Observation sums each partition's
+    docs, spans, text chars and media, then one metrics row per partition
+    that saw docs is built on the driver and appended. A partition with no
+    docs gets no row and counts as skipped, as does a committed one.
+    Killing the job between batches loses at most the in-flight batch,
+    which the next run redoes.
 
     Idempotence across mid-batch crashes: the spans write uses DYNAMIC
     partition overwrite — a redone partition REPLACES its own directory
@@ -78,27 +119,28 @@ def run_extraction_pipeline(
     behind (crash after the spans write but before the metrics append).
     The metrics append stays the commit record: a partition is "done" only
     once its metrics row exists, and rerunning a half-written partition is
-    safe because the rewrite is a replace.
+    safe because the rewrite is a replace. Observed sums count successful
+    task attempts only, so a retried task is not counted twice.
     """
     run_id = uuid.uuid4().hex[:12]
     docs = with_part(docs.select("doc_id", "spans"), num_parts)
     done = completed_parts(spark, metrics_path)
-    todo_rows = (
-        docs.select("part").distinct()
-        .join(done, "part", "left_anti")
-        .orderBy("part")
-        .collect()
-    )
-    todo = [r["part"] for r in todo_rows]
+    todo = [p for p in range(num_parts) if p not in done]
+    part = F.col("part")
     processed = []
     for i in range(0, len(todo), parts_per_batch):
         batch = todo[i : i + parts_per_batch]
         t0 = time.time()
-        batch_docs = docs.filter(F.col("part").isin(batch))
-        spans = extract_spans_df(batch_docs.select("doc_id", "spans"))
-        spans = spans.withColumn(
-            "part", F.pmod(F.xxhash64("doc_id"), F.lit(num_parts)).cast("long")
-        )
+        batch_docs = docs.filter(part.isin(batch)).select("doc_id", "spans")
+        counted = with_part(
+            map_docs(batch_docs, COUNTED_SPANS_SCHEMA, extract_counted_spans),
+            num_parts)
+        obs = Observation()
+        sums = [F.count(F.when(part == p, 1)).alias(f"n_docs_{p}")
+                for p in batch]
+        sums += [F.sum(F.when(part == p, F.col(c))).alias(f"{c}_{p}")
+                 for p in batch for c in COUNTS]
+        spans = counted.observe(obs, *sums).drop(*COUNTS)
         overwrite_key = "spark.sql.sources.partitionOverwriteMode"
         prev_mode = spark.conf.get(overwrite_key, "static")
         spark.conf.set(overwrite_key, "dynamic")
@@ -107,43 +149,20 @@ def run_extraction_pipeline(
         finally:
             spark.conf.set(overwrite_key, prev_mode)
         wall = time.time() - t0
-        # metrics from the files just written, NOT from `spans`: re-using the
-        # lazy `spans` plan here would re-execute the extraction kernel a
-        # second time per batch (its most expensive stage). The parquet
-        # read-back is partition-pruned to this batch's dirs and touches
-        # only cheap columnar scans.
-        written = spark.read.parquet(out_path).filter(F.col("part").isin(batch))
-        stats = (
-            # partition-dir inference types `part` as int32; cast so the
-            # metrics files actually match METRICS_SCHEMA's long
-            written.groupBy(F.col("part").cast("long").alias("part"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                F.sum(
-                    F.aggregate(
-                        F.transform(
-                            "spans",
-                            lambda s: F.coalesce(F.length(s["text"]), F.lit(0)),
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda a, b: a + b,
-                    )
-                ).alias("n_text_chars"),
-                F.sum(
-                    F.size(F.filter("spans", lambda s: s["kind"] != "text"))
-                ).alias("n_media"),
-            )
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("wall_sec", F.lit(float(wall)))
-            .withColumn("completed_at", F.lit(time.time()))
-            .select([f.name for f in METRICS_SCHEMA.fields])
-        )
-        stats.write.mode("append").parquet(metrics_path)
-        processed.extend(batch)
+        got = obs.get
+        now = time.time()
+        rows = [
+            (p, run_id, got[f"n_docs_{p}"],
+             *(got[f"{c}_{p}"] for c in COUNTS), wall, now)
+            for p in batch if got[f"n_docs_{p}"]
+        ]
+        if rows:
+            spark.createDataFrame(rows, METRICS_SCHEMA) \
+                .write.mode("append").parquet(metrics_path)
+        processed.extend(r[0] for r in rows)
     return {
         "run_id": run_id,
         "num_parts": num_parts,
-        "skipped_parts": num_parts - len(todo),
+        "skipped_parts": num_parts - len(processed),
         "processed_parts": processed,
     }

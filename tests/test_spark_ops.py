@@ -397,6 +397,22 @@ def test_multimodal_malformed_headers_fall_back():
         assert _decode_payload(corrupt)["format"] is not None
 
 
+def test_sniff_truncated_ico_and_avi():
+    """A truncated ICO or RIFF-AVI header falls to the stub path but still
+    sniffs as its own container: ICO as an image, AVI as a video (not
+    unknown, not RIFF audio)."""
+    from ksoup_spark.operators.multimodal import _decode_payload, _sniff
+
+    ico = b"\x00\x00\x01\x00\x01\x00"  # ICONDIR cut before its entry
+    avi = b"RIFF" + (4).to_bytes(4, "little") + b"AVI "  # no LIST hdrl
+    assert _sniff(ico) == ("ico", "image")
+    assert _sniff(avi) == ("avi", "video")
+    assert _decode_payload(ico)["format"] == "ico"
+    assert _decode_payload(avi)["kind"] == "video"
+    wave = b"RIFF" + (4).to_bytes(4, "little") + b"WAVE"
+    assert _sniff(wave) == ("riff", "audio")
+
+
 def test_extract_handles_malformed_and_empty(spark):
     df = spark.createDataFrame(
         [("a", "<p"), ("b", ""), ("c", None), ("d", "<table><tr>x")],
@@ -599,35 +615,28 @@ def test_auto_lsh_params_scaling():
 
 
 def test_pipeline_kernel_runs_once_per_doc(spark, tmp_path):
-    """Regression: metrics are computed from the written parquet, so the
-    extraction kernel executes exactly once per document per batch (the
-    old spans.groupBy re-ran the whole lineage a second time)."""
-    import pyspark.sql.types as T
-
+    """Regression: metrics are observed while the spans are written, never
+    recomputed by re-running the lineage, so the extraction kernel executes
+    exactly once per document per batch (the old spans.groupBy re-ran the
+    whole lineage a second time)."""
     from ksoup_spark.plans import pipeline as pl
 
     acc = spark.sparkContext.accumulator(0)
+    real = pl.extract_counted_spans
 
-    @F.udf(T.StringType())
-    def _tick(doc_id):
+    def spy(spans):
         acc.add(1)
-        return doc_id
-
-    real = pl.extract_spans_df
-
-    def spy(df):
-        return real(df.withColumn("doc_id", _tick("doc_id")))
+        return real(spans)
 
     docs = build_docs_table(spark, SF_DIR).select("doc_id", "spans").limit(40)
     n = docs.count()
-    old = pl.extract_spans_df
-    pl.extract_spans_df = spy
+    pl.extract_counted_spans = spy
     try:
         pl.run_extraction_pipeline(
             spark, docs, str(tmp_path / "spans"), str(tmp_path / "metrics"),
             num_parts=4, parts_per_batch=2)
     finally:
-        pl.extract_spans_df = old
+        pl.extract_counted_spans = real
     assert acc.value == n, f"kernel executed {acc.value}x for {n} docs"
 
 
@@ -723,6 +732,24 @@ def test_pii_scrub_redacts_and_counts(spark):
         "reach [EMAIL] at [IP] or [PHONE] today"
     assert (out[2].n_emails, out[2].n_ips, out[2].n_phones) == (0, 0, 0)
     assert out[2].clean_text == "no pii here just v1.2.3 and the number 42"
+
+
+def test_pii_scrub_sql_escapes_quotes(monkeypatch):
+    """A pattern with a single quote still yields SQL DuckDB executes, and
+    the quote matches literally."""
+    import duckdb
+
+    from ksoup_spark.operators import textstats
+
+    email = r"[A-Za-z0-9._%+'-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
+    monkeypatch.setattr(textstats, "PII_PATTERNS",
+                        [("email", email, "[EMAIL]")]
+                        + textstats.PII_PATTERNS[1:])
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT 1 AS doc_id, "
+                "'write to o''brien@mail.example.org today' AS text")
+    row = con.execute(textstats.pii_scrub_sql()).fetchone()
+    assert row == (1, 1, 0, 0, "write to [EMAIL] today")
 
 
 def test_gopher_quality_flags(spark):
