@@ -25,7 +25,6 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -84,13 +83,11 @@ def with_part(docs: DataFrame, num_parts: int) -> DataFrame:
 def completed_parts(spark: SparkSession, metrics_path: str) -> set[int]:
     """Partitions with a commit row. A missing metrics table means none;
     an unreadable one raises rather than redoing every partition."""
-    try:
-        rows = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path) \
-            .select("part").collect()
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    path = spark._jvm.org.apache.hadoop.fs.Path(metrics_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return set()
+    rows = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path) \
+        .select("part").collect()
     return {r["part"] for r in rows}
 
 

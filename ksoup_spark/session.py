@@ -3,6 +3,8 @@
 Arrow-batched Python execution is the hot path, so Arrow is always on and
 batches are size-bounded (giant-document guard — one multi-MB doc must not
 balloon a batch). AQE handles runtime skew re-planning at cluster scale.
+The default master, ``local[*]``, takes its thread count from the JVM's
+available processors.
 """
 
 from __future__ import annotations
@@ -22,13 +24,10 @@ DEFAULT_ARROW_BATCH = 512
 
 def get_spark(
     app: str = "ksoup-spark",
-    master: str | None = None,
+    master: str = "local[*]",
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     arrow_batch: int = DEFAULT_ARROW_BATCH,
 ) -> SparkSession:
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
     return (
         SparkSession.builder.appName(app)
         .master(master)

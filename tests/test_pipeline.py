@@ -156,6 +156,9 @@ def test_observed_counts_exact_under_task_retry(tmp_path):
         cwd=REPO, env=env, capture_output=True, text=True, timeout=600)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
     assert proc.returncode == 0 and lines, proc.stderr[-4000:]
+    # the second pass starts on a fresh metrics path after an Observation;
+    # finding it missing must not make Spark log a failed read
+    assert "PATH_NOT_FOUND" not in proc.stderr
     got = json.loads(lines[-1][len("RESULT "):])
     clean, retried = got["clean"], got["retried"]
     assert retried["failed_tasks"] >= 1  # the retry really happened

@@ -658,6 +658,40 @@ def test_passage_dedup_removes_cross_doc_banner(spark):
         assert r.clean_text == f"unique{i} text{i} here{i} now{i}"
 
 
+def test_minhash_lsh_pairs_production_path(spark):
+    """The xxhash64 MinHash-LSH path: identical texts pair at est_jaccard
+    1.0, a near-duplicate pairs below it, threshold drops what falls under
+    it, and texts that share no shingle never reach 1.0."""
+    from ksoup_spark.operators import dedup
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [(1, base), (2, base), (3, base + " today"),
+            (4, "alpha beta gamma delta epsilon zeta eta theta iota"),
+            (5, "red green blue yellow orange purple pink grey white"),
+            (6, "one two three four five six seven eight nine ten")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    sigs = {r.doc_id: r.signature
+            for r in dedup.minhash_signatures(docs, num_hashes=32).collect()}
+    assert len(sigs[1]) == 32 and sigs[1] == sigs[2] != sigs[3]
+
+    pairs = {(r.doc_a, r.doc_b): r.est_jaccard
+             for r in dedup.minhash_lsh_pairs(docs, num_hashes=32,
+                                              bands=8).collect()}
+    assert all(a < b for a, b in pairs)
+    assert pairs[(1, 2)] == 1.0
+    near = pairs[(1, 3)]
+    assert 0.5 <= near < 1.0
+    assert [p for p, est in pairs.items() if est == 1.0] == [(1, 2)]
+
+    cut = near + 0.01
+    kept = {(r.doc_a, r.doc_b): r.est_jaccard
+            for r in dedup.minhash_lsh_pairs(docs, num_hashes=32, bands=8,
+                                             threshold=cut).collect()}
+    assert kept == {p: est for p, est in pairs.items() if est >= cut}
+    assert (1, 2) in kept and (1, 3) not in kept
+
+
 def test_decontaminate_flags_benchmark_overlap(spark):
     """Docs carrying a benchmark n-gram are flagged; clean docs are not;
     the benchmark side rides a broadcast join (no shuffle of the eval
