@@ -577,7 +577,9 @@ def q_nodequery_has(spark, sf_dir):
     # at-subject branch produces these matches (a global-index compile
     # would count 0), and the count equals n_has
     lt_cnt = _cnt("div.b:has(div:not(:lt(99)) p)", "n_lt")
-    return (
+    # the six per-doc counts are materialized (eager local checkpoint) so
+    # the node table's cache can be released before the rows are returned
+    counts = (
         has_cnt.join(nested, "doc_id", "left").join(sib, "doc_id", "left")
         .join(has_or, "doc_id", "left").join(rooted, "doc_id", "left")
         .join(lt_cnt, "doc_id", "left")
@@ -592,7 +594,9 @@ def q_nodequery_has(spark, sf_dir):
             .alias("n_root"),
             F.coalesce(F.col("n_lt"), F.lit(0)).cast("int").alias("n_lt"),
         )
-    )
+    ).localCheckpoint()
+    nodes.unpersist()
+    return counts
 
 
 def q_nodequery_contains(spark, sf_dir):

@@ -11,9 +11,12 @@ Arrow record batches; the per-document parse loop runs inside the batch
 parallelism lives BETWEEN documents).
 
 At 100 TB scale: extraction is embarrassingly parallel (no shuffle needed
-beyond the optional salting pass), the parse kernel is CPU-bound per core,
-and Arrow batch size is bounded by spark.sql.execution.arrow.maxRecordsPerBatch
-so a multi-MB document cannot balloon executor memory.
+beyond the optional salting pass and, in the resumable pipeline
+(plans/pipeline.py), the write's rebalance by checkpoint partition, which
+lays out one file per partition per write task), the parse kernel is
+CPU-bound per core, and Arrow batch size is bounded by
+spark.sql.execution.arrow.maxRecordsPerBatch so a multi-MB document cannot
+balloon executor memory.
 """
 
 from __future__ import annotations

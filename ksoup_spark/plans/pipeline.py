@@ -6,13 +6,16 @@ metrics row (lineage: partition id, doc/span/char/media counts, wall time,
 run id). A rerun reads the metrics table and processes only the partitions
 it has no row for — a crashed 100 TB job resumes where it stopped.
 
-One pass is one write job plus one small commit append. The kernel emits
-per-doc counts next to its spans; an ``Observation`` on the frame being
-written sums them per partition while the spans files are written, and the
-driver builds the commit rows from those sums (per-file statistics gathered
-at write time and committed in the log record, as Delta Lake does). Nothing
-re-reads the written files, and the todo list comes from the metrics table
-alone, never from a job over the input.
+One pass is one Spark job: the spans write (plus AQE's map stage). The
+kernel emits per-doc counts next to its spans, the rows are rebalanced by
+partition so each write task writes one file per partition, and an
+``Observation`` above the rebalance sums the counts in the write's result
+stage. The driver then writes the commit rows itself: one parquet file per
+batch, built with pyarrow and renamed into the metrics directory through
+Hadoop's ``FileSystem`` (per-file statistics gathered at write time and
+committed in a record the driver writes straight to storage, as Delta Lake
+does). Nothing re-reads the written files, and the todo list comes from the
+metrics table alone, never from a job over the input.
 
 Storage is parquet directories (an Iceberg catalog slots in by swapping
 ``format("parquet")`` for ``format("iceberg")``; the sandbox has no Iceberg
@@ -25,8 +28,11 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -80,15 +86,69 @@ def with_part(docs: DataFrame, num_parts: int) -> DataFrame:
     )
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``path`` as a Hadoop ``Path``, with the ``FileSystem`` that holds it."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def completed_parts(spark: SparkSession, metrics_path: str) -> set[int]:
     """Partitions with a commit row. A missing metrics table means none;
-    an unreadable one raises rather than redoing every partition."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(metrics_path)
-    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+    an unreadable one raises rather than redoing every partition. Hidden
+    files (``_``-prefixed, such as an uncommitted ``_part-*.parquet``) are
+    not part of the table."""
+    fs, path = _hadoop_path(spark, metrics_path)
+    if not fs.exists(path):
         return set()
     rows = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path) \
         .select("part").collect()
     return {r["part"] for r in rows}
+
+
+def observed_spans(docs: DataFrame, batch: list[int],
+                   num_parts: int) -> tuple[DataFrame, Observation]:
+    """The frame one batch writes, and the Observation of its commit rows.
+
+    ``docs`` carries ``part``. The kernel output is rebalanced by ``part``
+    so a write task holds whole partitions and writes one file each (AQE
+    splits an oversized partition into files of the advisory size). The
+    per-part sums sit above the rebalance, in the write's result stage,
+    where Spark applies each successful task's update exactly once."""
+    part = F.col("part")
+    batch_docs = docs.filter(part.isin(batch)).select("doc_id", "spans")
+    counted = with_part(
+        map_docs(batch_docs, COUNTED_SPANS_SCHEMA, extract_counted_spans),
+        num_parts)
+    obs = Observation()
+    sums = [F.count(F.when(part == p, 1)).alias(f"n_docs_{p}") for p in batch]
+    sums += [F.sum(F.when(part == p, F.col(c))).alias(f"{c}_{p}")
+             for p in batch for c in COUNTS]
+    spans = counted.hint("rebalance", "part").observe(obs, *sums) \
+        .drop(*COUNTS)
+    return spans, obs
+
+
+def commit_rows(spark: SparkSession, metrics_path: str, rows: list) -> None:
+    """Append ``rows`` to the metrics table as one parquet file, written by
+    the driver: built with pyarrow, written under a hidden ``_part-*`` name,
+    then renamed to ``part-*``. The rename is the commit point; a crash
+    before it leaves only a hidden file, which readers skip."""
+    schema = to_arrow_schema(METRICS_SCHEMA)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema)
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs, root = _hadoop_path(spark, metrics_path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    hidden, final = Path(root, "_" + name), Path(root, name)
+    out = fs.create(hidden, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(hidden, final):
+        raise RuntimeError(f"metrics commit: cannot rename {hidden} to {final}")
 
 
 def run_extraction_pipeline(
@@ -102,49 +162,38 @@ def run_extraction_pipeline(
     """Extract spans for all not-yet-completed partitions; returns a summary.
 
     The todo list is ``range(num_parts)`` minus the partitions the metrics
-    table holds. Each batch of partitions is one atomic unit: spans written
-    (partitioned by `part`) while an Observation sums each partition's
-    docs, spans, text chars and media, then one metrics row per partition
-    that saw docs is built on the driver and appended. A partition with no
-    docs gets no row and counts as skipped, as does a committed one.
-    Killing the job between batches loses at most the in-flight batch,
-    which the next run redoes.
+    table holds. Each batch of partitions is one atomic unit and one Spark
+    job: spans rebalanced by `part` and written partitioned by it, one file
+    per partition per write task, while an Observation sums each
+    partition's docs, spans, text chars and media; then the driver writes
+    one metrics file with a row per partition that saw docs
+    (``commit_rows``; no Spark job). A partition with no docs gets no row
+    and counts as skipped, as does a committed one. Killing the job between
+    batches loses at most the in-flight batch, which the next run redoes.
 
     Idempotence across mid-batch crashes: the spans write uses DYNAMIC
-    partition overwrite — a redone partition REPLACES its own directory
-    instead of appending next to the orphaned files a crashed run left
-    behind (crash after the spans write but before the metrics append).
-    The metrics append stays the commit record: a partition is "done" only
-    once its metrics row exists, and rerunning a half-written partition is
+    partition overwrite (a write option; the session's setting is not
+    touched) — a redone partition REPLACES its own directory instead of
+    appending next to the orphaned files a crashed run left behind (crash
+    after the spans write but before the metrics commit). The metrics file
+    stays the commit record: a partition is "done" only once its metrics
+    row is renamed into place, and rerunning a half-written partition is
     safe because the rewrite is a replace. Observed sums count successful
-    task attempts only, so a retried task is not counted twice.
+    task attempts of the write's result stage only, so a retried task is
+    not counted twice.
     """
     run_id = uuid.uuid4().hex[:12]
     docs = with_part(docs.select("doc_id", "spans"), num_parts)
     done = completed_parts(spark, metrics_path)
     todo = [p for p in range(num_parts) if p not in done]
-    part = F.col("part")
     processed = []
     for i in range(0, len(todo), parts_per_batch):
         batch = todo[i : i + parts_per_batch]
         t0 = time.time()
-        batch_docs = docs.filter(part.isin(batch)).select("doc_id", "spans")
-        counted = with_part(
-            map_docs(batch_docs, COUNTED_SPANS_SCHEMA, extract_counted_spans),
-            num_parts)
-        obs = Observation()
-        sums = [F.count(F.when(part == p, 1)).alias(f"n_docs_{p}")
-                for p in batch]
-        sums += [F.sum(F.when(part == p, F.col(c))).alias(f"{c}_{p}")
-                 for p in batch for c in COUNTS]
-        spans = counted.observe(obs, *sums).drop(*COUNTS)
-        overwrite_key = "spark.sql.sources.partitionOverwriteMode"
-        prev_mode = spark.conf.get(overwrite_key, "static")
-        spark.conf.set(overwrite_key, "dynamic")
-        try:
-            spans.write.mode("overwrite").partitionBy("part").parquet(out_path)
-        finally:
-            spark.conf.set(overwrite_key, prev_mode)
+        spans, obs = observed_spans(docs, batch, num_parts)
+        spans.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("part").parquet(out_path)
         wall = time.time() - t0
         got = obs.get
         now = time.time()
@@ -154,8 +203,7 @@ def run_extraction_pipeline(
             for p in batch if got[f"n_docs_{p}"]
         ]
         if rows:
-            spark.createDataFrame(rows, METRICS_SCHEMA) \
-                .write.mode("append").parquet(metrics_path)
+            commit_rows(spark, metrics_path, rows)
         processed.extend(r[0] for r in rows)
     return {
         "run_id": run_id,

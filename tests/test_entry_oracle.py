@@ -79,3 +79,27 @@ def test_entry_smoke(spark):
     rows = df.limit(50).collect()
     assert len(rows) > 0
     assert set(df.columns) == {"doc_id", "pos", "kind", "text", "media_ref"}
+
+
+def test_nodequery_has_releases_node_table(spark, monkeypatch):
+    """The selector batch caches its node table for the six plans and
+    releases it before returning: once the rows are collected, the node
+    frame is not cached and no persistent RDD holds it (Spark names a
+    cached relation's RDD after its plan, which lists the node table's
+    columns)."""
+    from ksoup_spark.operators import extract
+
+    nodes = []
+    real = extract.node_table_df
+
+    def spy(*args, **kwargs):
+        nodes.append(real(*args, **kwargs))
+        return nodes[-1]
+
+    monkeypatch.setattr(extract, "node_table_df", spy)
+    rows = entrymod.q_nodequery_has(spark, SF_ORACLE_DIR).collect()
+    assert rows and len(nodes) == 1
+    assert not nodes[0].is_cached
+    held = spark.sparkContext._jsc.getPersistentRDDs()
+    names = [held.get(k).name() or "" for k in held.keySet()]
+    assert not [n for n in names if "subtree_end" in n], names

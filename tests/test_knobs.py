@@ -1,10 +1,13 @@
-"""Inventory of the environment variables the program reads.
+"""Inventory of the environment variables the program reads, and no
+session-state mutation in the library.
 
 Every knob is a setting that can go stale when the host changes. The
 program (ksoup_spark/, jobs/, __spark_entry__.py) is scanned for
 os.environ.get(K), os.getenv(K), os.environ[K] and ``K in os.environ``; the
 set of keys must equal the list below, so adding or dropping a knob is a
-visible change to this file.
+visible change to this file. The library (ksoup_spark/) must not call
+``conf.set``/``conf.unset`` on a session it was handed: a setting an
+operator needs goes on its reader or writer as an option.
 """
 
 from __future__ import annotations
@@ -61,3 +64,21 @@ def test_environment_knobs_are_the_listed_ones():
         for key in _env_reads(ast.parse(path.read_text())):
             found.setdefault(key, str(path.relative_to(REPO)))
     assert set(found) == KNOBS, found
+
+
+def _conf_mutations(tree):
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "unset")
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"):
+            yield f"{ast.unparse(node.func)} (line {node.lineno})"
+
+
+def test_library_sets_no_session_conf():
+    found = {
+        str(path.relative_to(REPO)): hits
+        for path in sorted((REPO / "ksoup_spark").rglob("*.py"))
+        if (hits := list(_conf_mutations(ast.parse(path.read_text()))))
+    }
+    assert found == {}, found
