@@ -579,17 +579,27 @@ def _decode_payload(data: bytes, strict: bool = False) -> dict:
     }
 
 
+def _int32(v: int | None) -> int | None:
+    """``v`` if it fits the schema's IntegerType, else NULL."""
+    return v if v is None or -2**31 <= v < 2**31 else None
+
+
 def media_metadata(df: DataFrame, id_col: str = "media_id",
                    payload_col: str = "payload",
                    strict: bool = False) -> DataFrame:
-    """binary payload -> typed metadata struct rows."""
+    """binary payload -> typed metadata struct rows.
+
+    A header field outside int32 (a hostile or corrupt header, e.g. a PNG
+    width of 0xFFFFFFF0) reads as NULL: that row keeps its other fields and
+    no other row of the batch is affected."""
     df = df.select(F.col(id_col).alias("media_id"),
                    F.col(payload_col).alias("payload"))
 
     def metadata(data: bytes) -> tuple:
         meta = _decode_payload(data, strict)
-        return (meta["kind"], len(data), meta["format"], meta["width"],
-                meta["height"], meta["duration_ms"],
+        return (meta["kind"], len(data), meta["format"],
+                _int32(meta["width"]), _int32(meta["height"]),
+                _int32(meta["duration_ms"]),
                 hashlib.sha256(data).hexdigest())
 
     return map_docs(df, MEDIA_META_SCHEMA, metadata)

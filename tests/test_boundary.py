@@ -8,6 +8,10 @@ everywhere at once. Two tests pin that:
   the streaming column UDF;
 * the structure — no other module under ksoup_spark/ opens its own Arrow or
   pandas boundary or hand-writes an Arrow type.
+
+The worker-side import-cache guard (``boundary._guard_zip_refresh``) is
+checked in a fresh interpreter, and through Spark: workers run it, the
+driver does not.
 """
 
 from __future__ import annotations
@@ -15,12 +19,17 @@ from __future__ import annotations
 import ast
 import inspect
 import pathlib
+import subprocess
+import sys
+import textwrap
+import zipimport
 
 import pytest
+from pyspark.sql.types import StringType, StructField, StructType
 
 import ksoup_spark
 from ksoup_spark.functions import html as H
-from ksoup_spark.operators import extract, multimodal
+from ksoup_spark.operators import boundary, extract, multimodal
 from ksoup_spark.streaming import stream
 
 _HTML = ("<html><head><title>T</title><meta name=description content=d>"
@@ -164,3 +173,118 @@ def test_one_boundary_module():
             if name in _BOUNDARY or name.startswith("pa."):
                 found.append(f"{path.relative_to(root)}:{node.lineno} {name}")
     assert found == []
+
+
+_ROOT = pathlib.Path(ksoup_spark.__file__).parent.parent
+
+
+def _run_fresh(code: str) -> None:
+    """Run ``code`` in a fresh interpreter; it asserts on its own."""
+    done = subprocess.run([sys.executable, "-c", textwrap.dedent(code)],
+                          cwd=_ROOT, capture_output=True, text=True,
+                          timeout=120)
+    assert done.returncode == 0, done.stderr
+
+
+def test_zip_guard_rereads_changed_archives_only(tmp_path):
+    _run_fresh(f"""
+        import importlib, sys, zipfile, zipimport
+        from ksoup_spark.operators import boundary
+
+        z = {str(tmp_path / "mods.zip")!r}
+
+        def write(*mods):
+            with zipfile.ZipFile(z, "w") as f:
+                for m in mods:
+                    f.writestr(m + ".py", f"NAME = {{m!r}}\\n")
+
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: (reads.append(p), real(p))[1]
+
+        write("m1")
+        sys.path.insert(0, z)
+        import m1
+        assert m1.NAME == "m1"
+        importlib.invalidate_caches()
+        assert reads.count(z) == 2  # the import and the stdlib's re-read
+
+        boundary._guard_zip_refresh()
+        boundary._guard_zip_refresh()
+        assert zipimport.zipimporter.invalidate_caches \\
+            is boundary._stamped_invalidate
+        importlib.invalidate_caches()  # first guarded refresh: one stamped read
+        del reads[:]
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads.count(z) == 0
+
+        write("m1", "m2")
+        importlib.invalidate_caches()
+        assert reads.count(z) == 1
+        import m2
+        assert m2.NAME == "m2"
+    """)
+
+
+def test_zip_guard_defers_to_lazy_stdlib():
+    _run_fresh("""
+        import zipimport
+        from ksoup_spark.operators import boundary
+
+        stdlib = zipimport.zipimporter.invalidate_caches
+        zipimport.zipimporter._get_files = lambda self: {}
+        boundary._guard_zip_refresh()
+        assert zipimport.zipimporter.invalidate_caches is stdlib
+    """)
+
+
+@pytest.mark.parametrize("loop", ["rows", "exploded", "column"])
+def test_worker_loops_install_zip_guard(loop):
+    """Each worker-side loop installs the guard itself: map_docs' ``rows``
+    and ``exploded`` and column_fn's ``batch``, each in a fresh process."""
+    _run_fresh(f"""
+        import zipimport
+        import pyarrow as pa
+        from pyspark.sql.types import StringType, StructField, StructType
+        from ksoup_spark.operators import boundary
+
+        class Frame:  # hands back the function mapInArrow would ship
+            def mapInArrow(self, f, schema):
+                return f
+
+        schema = StructType([StructField("k", StringType()),
+                             StructField("v", StringType())])
+        batch = pa.record_batch([pa.array(["a"]), pa.array(["x"])],
+                                names=["k", "v"])
+        guarded = boundary._stamped_invalidate
+        assert zipimport.zipimporter.invalidate_caches is not guarded
+        if {loop!r} == "column":
+            boundary.column_fn(StringType(), str.upper).func(batch.column(1))
+        else:
+            explode = {loop!r} == "exploded"
+            fn = (lambda v: ([v],)) if explode else str.upper
+            list(boundary.map_docs(Frame(), schema, fn, explode)(iter([batch])))
+        assert zipimport.zipimporter.invalidate_caches is guarded
+    """)
+
+
+def test_workers_run_zip_guard(spark):
+    def guard_name(_) -> str:
+        m = zipimport.zipimporter.invalidate_caches
+        return f"{m.__module__}.{m.__qualname__}"
+
+    html = spark.range(64).selectExpr("CAST(id AS STRING) AS doc_id",
+                                      "'<p>x</p>' AS v").repartition(8)
+    schema = StructType([StructField("doc_id", StringType()),
+                         StructField("guard", StringType())])
+    spark.range(8).repartition(8).count()  # warm-up job
+    by_op = boundary.map_docs(html, schema, guard_name)
+    by_col = boundary.column_fn(StringType(), guard_name)("v").alias("guard")
+    guarded = {"ksoup_spark.operators.boundary._stamped_invalidate"}
+    assert by_op.rdd.getNumPartitions() >= 8
+    assert {r.guard for r in by_op.collect()} == guarded
+    assert {r.guard for r in html.select(by_col).collect()} == guarded
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+    assert zipimport.zipimporter.invalidate_caches \
+        is not boundary._stamped_invalidate

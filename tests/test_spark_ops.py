@@ -191,6 +191,26 @@ def test_multimodal_metadata(spark):
     assert meta == again
 
 
+def test_multimodal_metadata_out_of_int32_is_null(spark):
+    """A header field outside int32 reads as NULL; the other row and the
+    bad row's other fields stay intact."""
+    def png(w, h):
+        return bytearray(b"\x89PNG\r\n\x1a\n\x00\x00\x00\rIHDR"
+                         + w.to_bytes(4, "big") + h.to_bytes(4, "big")
+                         + b"\x08\x06\x00\x00\x00")
+    bad_png = png(0xFFFFFFF0, 480)
+    media = spark.createDataFrame(
+        [("good", png(640, 480)), ("bad", bad_png)],
+        "media_id string, payload binary").repartition(1)
+    got = {r["media_id"]: r for r in multimodal.media_metadata(media).collect()}
+    assert (got["good"]["format"], got["good"]["width"],
+            got["good"]["height"]) == ("png", 640, 480)
+    bad = got["bad"]
+    assert bad["width"] is None
+    assert (bad["format"], bad["kind"], bad["height"], bad["n_bytes"]) == (
+        "png", "image", 480, len(bad_png))
+
+
 def test_multimodal_features_and_frames(spark):
     media = multimodal.synth_media_table(spark, 8)
     feats = multimodal.media_features(media, dim=16).collect()
