@@ -10,13 +10,17 @@ territory:
    (node lists + errors + quirks + form links must be identical), plus
    span/text extraction equality — the generator mixes every branch the C
    engine handles with the ones it bails on (doctype/comments/CDATA/
-   rawtext/foreign content/entities included).
+   rawtext/foreign content/entities included) — and over page-shaped
+   documents: doctype, head and body scaffolding around a soup body
+   (``_page``), which drive the preamble and postamble insertion modes.
 2. Compiled-selector-vs-kernel set equality over the nodequery fuzz
    corpus: random selectors from the test grammar, every compiled one
    must return the kernel's exact (doc_id, node_id) set.
 
 Usage:
     python jobs/fuzz_campaign.py --seed 20260819 --soups 20000 --selectors 1500
+
+(``--soups N`` runs N soups and N pages.)
 
 Prints one JSON line; exits non-zero on ANY divergence (with samples).
 """
@@ -79,6 +83,48 @@ def _soup(rng: random.Random) -> str:
     return "".join(parts)
 
 
+# document scaffolding around a soup body: the preamble and postamble
+# insertion modes (Initial .. AfterHead, AfterBody, AfterAfterBody)
+DOCTYPES = ["", "", "<!DOCTYPE html>", "<!doctype html>",
+            '<!DOCTYPE html PUBLIC "-//W3C//DTD HTML 4.01 Transitional//EN">',
+            '<!DOCTYPE html SYSTEM "about:legacy-compat">', "<!DOCTYPE>",
+            '<!DOCTYPE html PUBLIC "-//W3C//DTD XHTML 1.0 Transitional//EN"'
+            ' "http://www.w3.org/TR/xhtml1/DTD/xhtml1-transitional.dtd">']
+LEADS = ["", "", " ", "\n", "<!-- lead -->", " <!--x-->\n", "lead text"]
+HTML_OPENS = ["", "<html>", "<html>", "<HTML lang=en>", "<html class=a>"]
+HEAD_ITEMS = ["<title>Doc &amp; t</title>", "<title>a</titlex>b</title>",
+              "<TITLE>U</TITLE>", "<title>open &lt;b",
+              "<base href='http://ex.example/p/'>", "<base target=_top>",
+              "<BASE HREF='http://up.example/'>", "<meta charset=utf-8>",
+              "<meta name=d content=x>", "<link rel=icon href=/f.ico>",
+              "<script>var s='</div>';</script>", "<style>p{}</style>",
+              "<noscript><p>n</p></noscript>", "text in head", " ", "\n",
+              "<!-- h -->", "<template><p>t</p></template>",
+              "<html data-x=1>", "</p>", "<![CDATA[c]]>", "<head>"]
+BETWEEN = ["", "", " ", "\n", "<!--ab-->", "late text", "<meta name=late>",
+           "<title>late</title>", "</br>"]
+BODY_OPENS = ["", "<body>", "<body>", "<BODY class=b>",
+              "<body id=main onload=x>", "<frameset>"]
+POSTAMBLES = ["", "</body>", "</body></html>", "</body></html>",
+              "</body>\n<!-- after --></html>\n", "</html> trailing",
+              "</body><p>late</p></html><body class=again>",
+              "</body></html><!--end--> ", "</html></html><html x=1>"]
+
+
+def _page(rng: random.Random) -> str:
+    """A page-shaped document: doctype, head and body scaffolding around a
+    ``_soup`` body."""
+    head = ""
+    if rng.random() < 0.85:
+        head = (("<head>" if rng.random() < 0.8 else "")
+                + "".join(rng.choice(HEAD_ITEMS)
+                          for _ in range(rng.randint(0, 6)))
+                + ("</head>" if rng.random() < 0.8 else ""))
+    return (rng.choice(DOCTYPES) + rng.choice(LEADS) + rng.choice(HTML_OPENS)
+            + head + rng.choice(BETWEEN) + rng.choice(BODY_OPENS)
+            + _soup(rng) + rng.choice(POSTAMBLES))
+
+
 def _table(d):
     return {
         "kind": d.kind, "tag": d.tag, "attrs": d.attrs, "text": d.text,
@@ -89,7 +135,7 @@ def _table(d):
     }
 
 
-def run_tree_parity(seed: int, n: int) -> dict:
+def run_tree_parity(seed: int, n: int, gen=_soup) -> dict:
     from ksoup_spark.kernel.ctokenizer import tree_module
     if tree_module() is None:
         return {"skipped": "C tree engine unavailable", "n": 0, "bad": 0}
@@ -97,7 +143,7 @@ def run_tree_parity(seed: int, n: int) -> dict:
     bad = []
     assert "KSOUP_SPARK_NO_CTREE" not in os.environ
     for i in range(n):
-        html = _soup(rng)
+        html = gen(rng)
         d1 = parse(html)
         os.environ["KSOUP_SPARK_NO_CTREE"] = "1"
         try:
@@ -171,13 +217,18 @@ def main() -> int:
 
     t0 = time.time()
     tree = run_tree_parity(args.seed, args.soups)
+    # as many pages as soups, from their own stream, so a seed's soups stay
+    # the same
+    pages = run_tree_parity(args.seed + 1, args.soups, _page)
     t1 = time.time()
     sel = run_selector_diff(args.seed, args.selectors)
     out = {
         "seed": args.seed,
-        "tree_parity": tree, "tree_sec": round(t1 - t0, 1),
+        "tree_parity": tree, "page_parity": pages,
+        "tree_sec": round(t1 - t0, 1),
         "selector_diff": sel, "selector_sec": round(time.time() - t1, 1),
-        "ok": tree.get("bad", 0) == 0 and sel.get("bad", 0) == 0,
+        "ok": tree.get("bad", 0) == 0 and pages.get("bad", 0) == 0
+        and sel.get("bad", 0) == 0,
     }
     print(json.dumps(out))
     return 0 if out["ok"] else 1

@@ -1732,10 +1732,11 @@ fail:
 
 /* ---- tree-construction fast engine --------------------------------------
  *
- * Processes the common HTML5 insertion-mode cases (InBody / InCell /
- * InCaption / Text) directly in C, operating on the SAME Python lists the
- * Python HtmlTreeBuilder mutates (doc.kind/tag/attrs/text/ns/children/
- * parent, builder.stack/formatting/pushed_tags). Any token outside the
+ * Processes the common HTML5 insertion-mode cases (the document preamble
+ * and postamble, InBody / InCell / InCaption / Text and the table modes)
+ * directly in C, operating on the SAME Python lists the Python
+ * HtmlTreeBuilder mutates (doc.kind/tag/attrs/text/ns/children/parent,
+ * builder.stack/formatting/pushed_tags). Any token outside the
  * handled subset is returned ("bailed") to Python, which processes it with
  * the full spec implementation and re-enters — zero state conversion in
  * either direction. Semantics are an exact mirror of treebuilder.py's
@@ -1769,23 +1770,32 @@ fail:
 #define TR_OK 0
 #define TR_BAIL 1
 #define TR_ERR (-1)
+#define TR_REDISPATCH 2
 
 static long M_IN_BODY = -100, M_IN_CELL = -100, M_IN_CAPTION = -100,
             M_TEXT = -100, M_IN_TABLE = -100, M_IN_TABLE_BODY = -100,
-            M_IN_ROW = -100, M_IN_TABLE_TEXT = -100;
+            M_IN_ROW = -100, M_IN_TABLE_TEXT = -100, M_INITIAL = -100,
+            M_BEFORE_HTML = -100, M_BEFORE_HEAD = -100, M_IN_HEAD = -100,
+            M_AFTER_HEAD = -100, M_AFTER_BODY = -100,
+            M_AFTER_AFTER_BODY = -100;
 
 typedef struct {
     PyObject *kind, *tag, *attrs, *text, *ns, *children, *parent;
     PyObject *stack, *formatting, *pushed, *pending;
     long mode, skip_lf, frameset_ok, original_mode, form_id, errors,
-         has_foreign;
+         has_foreign, head_id, base_latched, quirks;
+    PyObject *base_uri; /* owned; set when a <base href> latches */
+    Tok *tok;           /* the run's tokenizer, for RCDATA/RAWTEXT switches */
     TagCache tc;
 } Tree;
 
 static PyObject *py_set_tree_modes(PyObject *self, PyObject *args) {
-    if (!PyArg_ParseTuple(args, "llllllll", &M_IN_BODY, &M_IN_CELL,
+    if (!PyArg_ParseTuple(args, "lllllllllllllll", &M_IN_BODY, &M_IN_CELL,
                           &M_IN_CAPTION, &M_TEXT, &M_IN_TABLE,
-                          &M_IN_TABLE_BODY, &M_IN_ROW, &M_IN_TABLE_TEXT))
+                          &M_IN_TABLE_BODY, &M_IN_ROW, &M_IN_TABLE_TEXT,
+                          &M_INITIAL, &M_BEFORE_HTML, &M_BEFORE_HEAD,
+                          &M_IN_HEAD, &M_AFTER_HEAD, &M_AFTER_BODY,
+                          &M_AFTER_AFTER_BODY))
         return NULL;
     Py_RETURN_NONE;
 }
@@ -1872,19 +1882,21 @@ static int tr_set_parent(Tree *tr, Py_ssize_t nid, Py_ssize_t par) {
     return 0;
 }
 
+/* append nid as the last child of par (Doc.append_child on a fresh node) */
+static int tr_append_to(Tree *tr, Py_ssize_t par, Py_ssize_t nid) {
+    PyObject *v = PyLong_FromSsize_t(nid);
+    if (!v) return -1;
+    int r = PyList_Append(PyList_GET_ITEM(tr->children, par), v);
+    Py_DECREF(v);
+    return r ? -1 : tr_set_parent(tr, nid, par);
+}
+
 /* append nid under the current insertion parent (foster mode never active
  * at tree_run boundaries); mirrors the non-foster path of _attach /
  * insert_element */
 static int tr_attach(Tree *tr, Py_ssize_t nid) {
     Py_ssize_t par = tr_top(tr);
-    if (par < 0) par = 0;
-    PyObject *sibs = PyList_GET_ITEM(tr->children, par);
-    PyObject *v = PyLong_FromSsize_t(nid);
-    if (!v) return -1;
-    int r = PyList_Append(sibs, v);
-    Py_DECREF(v);
-    if (r) return -1;
-    return tr_set_parent(tr, nid, par);
+    return tr_append_to(tr, par < 0 ? 0 : par, nid);
 }
 
 static int tr_push_stack(Tree *tr, Py_ssize_t nid) {
@@ -1911,15 +1923,8 @@ static Py_ssize_t tr_insert_element(Tree *tr, PyObject *name,
     Py_ssize_t nid = tr_new_node(tr, K_ELEM, name, attrs_dict, NULL);
     Py_DECREF(attrs_dict);
     if (nid < 0) return -1;
-    /* inline non-foster attach: parent BEFORE pushing self */
-    Py_ssize_t par = tr_top(tr);
-    if (par < 0) par = 0;
-    PyObject *sibs = PyList_GET_ITEM(tr->children, par);
-    PyObject *v = PyLong_FromSsize_t(nid);
-    if (!v) return -1;
-    int r = PyList_Append(sibs, v);
-    Py_DECREF(v);
-    if (r || tr_set_parent(tr, nid, par)) return -1;
+    /* non-foster attach: parent BEFORE pushing self */
+    if (tr_attach(tr, nid)) return -1;
     if (push && tr_push_stack(tr, nid)) return -1;
     if (PySet_Add(tr->pushed, name)) return -1;
     return nid;
@@ -1963,14 +1968,20 @@ static long tr_last_formatting(Tree *tr, const char *cname) {
     return -1;
 }
 
-/* scope query matching by tag name, bounded by flag mask; cap 101 frames
- * (_in_scope / MAX_SCOPE_SEARCH). pushed-tags latch makes never-pushed
- * targets O(1). foreign frame => False, mirroring _in_scope. */
-static int tr_in_scope_name(Tree *tr, const char *cname, int bound_mask) {
+/* has a tag of this name ever been pushed (the pushed_tags latch) */
+static int tr_pushed_has(Tree *tr, const char *cname) {
     PyObject *t = PyUnicode_FromString(cname);
     if (!t) return -1;
     int has = PySet_Contains(tr->pushed, t);
     Py_DECREF(t);
+    return has;
+}
+
+/* scope query matching by tag name, bounded by flag mask; cap 101 frames
+ * (_in_scope / MAX_SCOPE_SEARCH). pushed-tags latch makes never-pushed
+ * targets O(1). foreign frame => False, mirroring _in_scope. */
+static int tr_in_scope_name(Tree *tr, const char *cname, int bound_mask) {
+    int has = tr_pushed_has(tr, cname);
     if (has < 0) return -1;
     if (!has) return 0;
     Py_ssize_t n = PyList_GET_SIZE(tr->stack);
@@ -2254,6 +2265,72 @@ static int tr_text_mode_text(Tree *tr, PyObject *txt) {
     return r ? TR_ERR : TR_OK;
 }
 
+/* first ELEMENT child of the document node (Doc.html_el), or -1 */
+static Py_ssize_t tr_html_el(Tree *tr) {
+    PyObject *kids = PyList_GET_ITEM(tr->children, 0);
+    Py_ssize_t n = PyList_GET_SIZE(kids);
+    for (Py_ssize_t i = 0; i < n; i++) {
+        Py_ssize_t c = (Py_ssize_t)tr_l(kids, i);
+        if (tr_l(tr->kind, c) == K_ELEM) return c;
+    }
+    return -1;
+}
+
+/* _in_body_start's html/body attribute merge: keys the element does not
+ * have yet are added; ad is STOLEN */
+static int tr_merge_into(Tree *tr, Py_ssize_t nid, PyObject *ad) {
+    PyObject *a = PyList_GET_ITEM(tr->attrs, nid);
+    int r = 0;
+    if (!PyDict_Check(a)) {
+        Py_INCREF(ad);
+        r = PyList_SetItem(tr->attrs, nid, ad);
+    } else {
+        PyObject *k, *v;
+        Py_ssize_t pos = 0;
+        while (PyDict_Next(ad, &pos, &k, &v))
+            if (!PyDict_SetDefault(a, k, v)) { r = -1; break; }
+    }
+    Py_DECREF(ad);
+    return r;
+}
+
+/* <html> start in body and preamble modes (_in_body_start "html"); an
+ * open template (on_stack) bails, conservatively by the pushed latch */
+static int tr_start_html(Tree *tr, PyObject *pairs) {
+    int ht = tr_pushed_has(tr, "template");
+    if (ht < 0) return TR_ERR;
+    if (ht) return TR_BAIL;
+    PyObject *ad = tr_norm_attrs(tr, pairs);
+    if (!ad) return PyErr_Occurred() ? TR_ERR : TR_BAIL;
+    tr->errors++;
+    Py_ssize_t root = tr_html_el(tr);
+    if (root < 0) { Py_DECREF(ad); return TR_OK; }
+    return tr_merge_into(tr, root, ad) ? TR_ERR : TR_OK;
+}
+
+/* <body> start in body modes (_in_body_start "body"); Doc.body()'s
+ * find_first fallback (no body/frameset under <html>) bails */
+static int tr_start_body(Tree *tr, PyObject *pairs) {
+    Py_ssize_t h = tr_html_el(tr), b = -1;
+    if (h >= 0) {
+        PyObject *kids = PyList_GET_ITEM(tr->children, h);
+        Py_ssize_t n = PyList_GET_SIZE(kids);
+        for (Py_ssize_t i = 0; i < n && b < 0; i++) {
+            Py_ssize_t c = (Py_ssize_t)tr_l(kids, i);
+            if (tr_l(tr->kind, c) == K_ELEM &&
+                (tr_tag_is(tr, c, "body") || tr_tag_is(tr, c, "frameset")))
+                b = c;
+        }
+    }
+    if (b < 0) return TR_BAIL;
+    PyObject *ad = tr_norm_attrs(tr, pairs);
+    if (!ad) return PyErr_Occurred() ? TR_ERR : TR_BAIL;
+    tr->errors++;
+    if (!tr_tag_is(tr, b, "body")) { Py_DECREF(ad); return TR_OK; }
+    tr->frameset_ok = 0;
+    return tr_merge_into(tr, b, ad) ? TR_ERR : TR_OK;
+}
+
 /* start tag in body-equivalent modes. cname: lowered ASCII name.
  * name_l: its interned object (borrowed via caller). */
 static int tr_body_start(Tree *tr, const char *cname, PyObject *name_l,
@@ -2477,10 +2554,7 @@ static int tr_body_start(Tree *tr, const char *cname, PyObject *name_l,
         return TR_OK;
     }
     if (strcmp(cname, "form") == 0) {
-        PyObject *tmpl = PyUnicode_FromString("template");
-        if (!tmpl) return TR_ERR;
-        int has_t = PySet_Contains(tr->pushed, tmpl);
-        Py_DECREF(tmpl);
+        int has_t = tr_pushed_has(tr, "template");
         if (has_t < 0) return TR_ERR;
         if (has_t || tr->form_id != -1) return TR_BAIL;
         PyObject *ad = tr_norm_attrs(tr, pairs);
@@ -2493,6 +2567,8 @@ static int tr_body_start(Tree *tr, const char *cname, PyObject *name_l,
         tr->form_id = (long)el;
         return TR_OK;
     }
+    if (strcmp(cname, "html") == 0) return tr_start_html(tr, pairs);
+    if (strcmp(cname, "body") == 0) return tr_start_body(tr, pairs);
     return TR_BAIL;
 }
 
@@ -2560,6 +2636,16 @@ static int tr_body_end(Tree *tr, const char *cname) {
                 break;
             }
         return TR_OK;
+    }
+    if ((strcmp(cname, "body") == 0 || strcmp(cname, "html") == 0) &&
+        tr->mode == M_IN_BODY) {
+        /* </body> and </html> (_in_body_end): both leave for AfterBody;
+         * </html> is then processed again there */
+        int sc = tr_in_scope_name(tr, "body", TF_SCOPE_BASE);
+        if (sc < 0) return TR_ERR;
+        if (!sc) { tr->errors++; return TR_OK; }
+        tr->mode = M_AFTER_BODY;
+        return cname[0] == 'h' ? TR_REDISPATCH : TR_OK;
     }
     if (strcmp(cname, "body") == 0 || strcmp(cname, "html") == 0 ||
         strcmp(cname, "template") == 0 || strcmp(cname, "form") == 0)
@@ -2649,10 +2735,7 @@ static int tr_body_end(Tree *tr, const char *cname) {
 
 /* in_table_scope: name match (HTML ns) bounded by html/table/template */
 static int tr_in_table_scope(Tree *tr, const char *cname) {
-    PyObject *t = PyUnicode_FromString(cname);
-    if (!t) return -1;
-    int has = PySet_Contains(tr->pushed, t);
-    Py_DECREF(t);
+    int has = tr_pushed_has(tr, cname);
     if (has < 0) return -1;
     if (!has) return 0;
     Py_ssize_t n = PyList_GET_SIZE(tr->stack);
@@ -2718,7 +2801,6 @@ static int tree_handle(Tree *tr, PyObject *tok); /* fwd */
 /* IN_TABLE "anything else" fall-through shared by body/row modes.
  * Returns TR_OK / TR_BAIL / TR_ERR; TR_REDISPATCH means the caller should
  * run tree_handle again on the same token (Python reprocess). */
-#define TR_REDISPATCH 2
 
 static int tr_in_table(Tree *tr, PyObject *tok) {
     PyObject *k = PyTuple_GET_ITEM(tok, 0);
@@ -2829,10 +2911,328 @@ static int tr_row_exit(Tree *tr) {
     return TR_REDISPATCH;
 }
 
+/* ---- document preamble and postamble --------------------------------
+ * Initial, BeforeHtml, BeforeHead, InHead, AfterHead, AfterBody and
+ * AfterAfterBody (treebuilder.py _initial .. _after_after_body) for the
+ * tokens a typical page carries: doctype, whitespace, comments, html/head/
+ * body scaffolding, title/style/noframes/script in head, base/meta/link.
+ * Everything rarer bails before touching the tree: a doctype that selects
+ * (limited) quirks, head text with leading whitespace, noscript, template,
+ * frameset, head elements after </head>, cdata. */
+
+#define K_DOCTYPE 6
+
+static PyObject *S_title, *S_style, *S_noframes, *S_html, *S_head, *S_body,
+    *S_href;
+
+/* 1 when txt has no leading HTML whitespace char (_WS), else 0; *all is 1
+ * when every char is whitespace */
+static int tr_ws(PyObject *txt, int *all) {
+    Py_ssize_t l;
+    const char *p = PyUnicode_AsUTF8AndSize(txt, &l);
+    if (!p) return -1;
+    Py_ssize_t i = 0;
+    while (i < l && (p[i] == ' ' || p[i] == '\t' || p[i] == '\n' ||
+                     p[i] == '\f' || p[i] == '\r'))
+        i++;
+    *all = i == l;
+    return i == 0;
+}
+
+static int tr_comment_to(Tree *tr, PyObject *data, Py_ssize_t par) {
+    Py_ssize_t nid = tr_new_node(tr, K_COMMENT, NULL, NULL, data);
+    if (nid < 0) return TR_ERR;
+    if (par < 0) return tr_attach(tr, nid) ? TR_ERR : TR_OK;
+    return tr_append_to(tr, par, nid) ? TR_ERR : TR_OK;
+}
+
+/* _append_char_to: merge into a trailing TEXT child of par, else append */
+static int tr_text_to(Tree *tr, Py_ssize_t par, PyObject *txt) {
+    PyObject *sibs = PyList_GET_ITEM(tr->children, par);
+    Py_ssize_t sn = PyList_GET_SIZE(sibs);
+    if (sn) {
+        Py_ssize_t last = (Py_ssize_t)tr_l(sibs, sn - 1);
+        if (tr_l(tr->kind, last) == K_TEXT) {
+            PyObject *old = PyList_GET_ITEM(tr->text, last);
+            PyObject *m = PyUnicode_Concat(old == Py_None ? S_empty : old,
+                                           txt);
+            if (!m || PyList_SetItem(tr->text, last, m)) return TR_ERR;
+            return TR_OK;
+        }
+    }
+    Py_ssize_t nid = tr_new_node(tr, K_TEXT, NULL, NULL, txt);
+    if (nid < 0 || tr_append_to(tr, par, nid)) return TR_ERR;
+    return TR_OK;
+}
+
+/* insert_char kind for a text token at the current node */
+static long tr_char_kind(Tree *tr) {
+    Py_ssize_t top = tr_top(tr);
+    return top >= 0 && (tr_tag_is(tr, top, "script") ||
+                        tr_tag_is(tr, top, "style")) ? K_DATA : K_TEXT;
+}
+
+/* _initial's doctype for a no-quirks one: name "html" (any case), no
+ * public id, no force-quirks flag, and not the one IBM system id
+ * _quirks_mode lists; any other doctype bails */
+static int tr_doctype(Tree *tr, PyObject *tok) {
+    PyObject *name = PyTuple_GET_ITEM(tok, 1), *pub = PyTuple_GET_ITEM(tok, 2),
+             *sys = PyTuple_GET_ITEM(tok, 3);
+    if (PyTuple_GET_ITEM(tok, 4) == Py_True || name == Py_None ||
+        (pub != Py_None && PyUnicode_GET_LENGTH(pub)))
+        return TR_BAIL;
+    char low[8];
+    Py_ssize_t ll;
+    int lr = tr_lower_name(name, low, sizeof(low), &ll);
+    if (lr < 0) return TR_ERR;
+    if (lr > 0 || strcmp(low, "html") != 0) return TR_BAIL;
+    if (sys != Py_None) {
+        static const char ibm[] =
+            "http://www.ibm.com/data/dtd/v11/ibmxhtml1-transitional.dtd";
+        char sl[sizeof(ibm) + 1];
+        Py_ssize_t sll;
+        lr = tr_lower_name(sys, sl, sizeof(sl), &sll);
+        if (lr < 0) return TR_ERR;
+        if (lr == 0 && strcmp(sl, ibm) == 0) return TR_BAIL;
+    }
+    PyObject *ad = Py_BuildValue("{sOsOsO}", "name", name, "publicid",
+                                 pub == Py_None ? S_empty : pub, "systemid",
+                                 sys == Py_None ? S_empty : sys);
+    if (!ad) return TR_ERR;
+    Py_ssize_t nid = tr_new_node(tr, K_DOCTYPE, NULL, ad, name);
+    Py_DECREF(ad);
+    if (nid < 0 || tr_append_to(tr, 0, nid)) return TR_ERR;
+    tr->quirks = 0;
+    tr->mode = M_BEFORE_HTML;
+    return TR_OK;
+}
+
+/* element under the document node, pushed (_before_html) */
+static int tr_open_html(Tree *tr, PyObject *ad) {
+    Py_ssize_t nid = tr_new_node(tr, K_ELEM, S_html, ad, NULL);
+    Py_DECREF(ad);
+    if (nid < 0 || tr_append_to(tr, 0, nid) || tr_push_stack(tr, nid) ||
+        PySet_Add(tr->pushed, S_html))
+        return TR_ERR;
+    tr->mode = M_BEFORE_HEAD;
+    return TR_OK;
+}
+
+/* insert_element(name, ad) with ad STOLEN; TR_OK / TR_ERR */
+static int tr_open(Tree *tr, PyObject *name, PyObject *ad, long *nidp) {
+    if (!ad) return TR_ERR;
+    Py_ssize_t nid = tr_insert_element(tr, name, ad, 1);
+    if (nid < 0) return TR_ERR;
+    if (nidp) *nidp = (long)nid;
+    return TR_OK;
+}
+
+/* _rcdata / _rawtext / in-head script: open the element, enter Text mode
+ * and switch the run's tokenizer as the Python handler switches its own */
+static int tr_open_text(Tree *tr, PyObject *name, PyObject *ad, int state,
+                        const char *needle) {
+    if (tr_open(tr, name, ad, NULL)) return TR_ERR;
+    tr->original_mode = tr->mode;
+    tr->mode = M_TEXT;
+    Tok *t = tr->tok;
+    t->state = state;
+    t->rawtext_tag = name;
+    t->needle = (char *)needle;
+    t->nlen = (Py_ssize_t)strlen(needle);
+    t->paused = 0;
+    return TR_OK;
+}
+
+static int tr_preamble(Tree *tr, PyObject *tok, PyObject *k, long mode) {
+    char cname[96] = "";
+    Py_ssize_t cl;
+    int all_ws = 0, bare = 0;
+    PyObject *pairs = NULL;
+    if (k == S_text) {
+        bare = tr_ws(PyTuple_GET_ITEM(tok, 1), &all_ws);
+        if (bare < 0) return TR_ERR;
+    } else if (k == S_start || k == S_end) {
+        int lr = tr_lower_name(PyTuple_GET_ITEM(tok, 1), cname,
+                               sizeof(cname), &cl);
+        if (lr < 0) return TR_ERR;
+        if (lr > 0) return TR_BAIL;
+        if (k == S_start) pairs = PyTuple_GET_ITEM(tok, 2);
+    } else if (k == S_cdata) {
+        return TR_BAIL;
+    }
+#define IS(x) (strcmp(cname, x) == 0)
+    int start = k == S_start, end = k == S_end;
+    /* an end tag these modes ignore with an error */
+    int stray_end = end && !IS("head") && !IS("body") && !IS("html") &&
+                    !IS("br");
+
+    if (k == S_comment) {
+        /* under the document before <html> and after </html>, under
+         * <html> after </body>, else at the current node */
+        Py_ssize_t par = -1;
+        if (mode == M_INITIAL || mode == M_BEFORE_HTML ||
+            mode == M_AFTER_AFTER_BODY) {
+            par = 0;
+        } else if (mode == M_AFTER_BODY) {
+            par = tr_html_el(tr);
+            if (par < 0) par = 0;
+        }
+        return tr_comment_to(tr, PyTuple_GET_ITEM(tok, 1), par);
+    }
+    if (k == S_doctype && mode == M_INITIAL) return tr_doctype(tr, tok);
+    if (mode == M_INITIAL) {
+        if (all_ws) return TR_OK;
+        tr->quirks = 1;
+        tr->mode = M_BEFORE_HTML;
+        return TR_REDISPATCH;
+    }
+    if (mode == M_BEFORE_HTML) {
+        if (k == S_doctype) { tr->errors++; return TR_OK; }
+        if (all_ws) return TR_OK;
+        if (start && IS("html")) {
+            PyObject *ad = tr_norm_attrs(tr, pairs);
+            if (!ad) return PyErr_Occurred() ? TR_ERR : TR_BAIL;
+            return tr_open_html(tr, ad);
+        }
+        if (stray_end) { tr->errors++; return TR_OK; }
+        PyObject *ad = PyDict_New();
+        if (!ad || tr_open_html(tr, ad)) return TR_ERR;
+        return TR_REDISPATCH;
+    }
+    if (k == S_doctype) { tr->errors++; return TR_OK; }
+    if (start && IS("html")) return tr_start_html(tr, pairs);
+
+    if (mode == M_BEFORE_HEAD) {
+        if (all_ws) return TR_OK;
+        if (start && IS("head")) {
+            PyObject *ad = tr_norm_attrs(tr, pairs);
+            if (!ad) return PyErr_Occurred() ? TR_ERR : TR_BAIL;
+            if (tr_open(tr, S_head, ad, &tr->head_id)) return TR_ERR;
+            tr->mode = M_IN_HEAD;
+            return TR_OK;
+        }
+        if (stray_end) { tr->errors++; return TR_OK; }
+        if (tr_open(tr, S_head, PyDict_New(), &tr->head_id)) return TR_ERR;
+        tr->mode = M_IN_HEAD;
+        return TR_REDISPATCH;
+    }
+    if (mode == M_IN_HEAD) {
+        if (k == S_text) {
+            if (all_ws)
+                return tr_insert_char(tr, PyTuple_GET_ITEM(tok, 1),
+                                      tr_char_kind(tr)) ? TR_ERR : TR_OK;
+            if (!bare) return TR_BAIL; /* Python splits off the lead */
+        } else if (start) {
+            if (IS("noscript") || IS("template")) return TR_BAIL;
+            if (IS("head")) { tr->errors++; return TR_OK; }
+            int empty = IS("base") || IS("basefont") || IS("bgsound") ||
+                        IS("command") || IS("link") || IS("meta");
+            int rc = IS("title"), raw = IS("noframes") || IS("style");
+            int scr = IS("script");
+            if (empty || rc || raw || scr) {
+                PyObject *ad = tr_norm_attrs(tr, pairs);
+                if (!ad) return PyErr_Occurred() ? TR_ERR : TR_BAIL;
+                if (rc) return tr_open_text(tr, S_title, ad, ST_RCDATA,
+                                            "</title");
+                if (scr) return tr_open_text(tr, S_script, ad, ST_SCRIPT,
+                                             "</script");
+                if (raw)
+                    return IS("style")
+                        ? tr_open_text(tr, S_style, ad, ST_RAWTEXT, "</style")
+                        : tr_open_text(tr, S_noframes, ad, ST_RAWTEXT,
+                                       "</noframes");
+                if (IS("base") && !tr->base_latched) {
+                    PyObject *href = PyDict_GetItemWithError(ad, S_href);
+                    if (!href && PyErr_Occurred()) { Py_DECREF(ad); return TR_ERR; }
+                    if (href && PyUnicode_Check(href) &&
+                        PyUnicode_GET_LENGTH(href)) {
+                        Py_INCREF(href);
+                        Py_XSETREF(tr->base_uri, href);
+                        tr->base_latched = 1;
+                    }
+                }
+                PyObject *nm = name_obj(cname, cl);
+                if (!nm) { Py_DECREF(ad); return TR_ERR; }
+                Py_ssize_t r = tr_insert_empty(tr, nm, ad);
+                Py_DECREF(nm);
+                return r < 0 ? TR_ERR : TR_OK;
+            }
+        } else if (end) {
+            if (IS("template")) return TR_BAIL;
+            if (IS("head")) {
+                if (tr_pop(tr) < 0) return TR_ERR;
+                tr->mode = M_AFTER_HEAD;
+                return TR_OK;
+            }
+            if (stray_end) { tr->errors++; return TR_OK; }
+        }
+        /* _in_head_anything_else */
+        Py_ssize_t top = tr_top(tr);
+        if (top >= 0 && tr_tag_is(tr, top, "head") && tr_pop(tr) < 0)
+            return TR_ERR;
+        tr->mode = M_AFTER_HEAD;
+        return TR_REDISPATCH;
+    }
+    if (mode == M_AFTER_HEAD) {
+        if (k == S_text) {
+            if (all_ws)
+                return tr_insert_char(tr, PyTuple_GET_ITEM(tok, 1),
+                                      tr_char_kind(tr)) ? TR_ERR : TR_OK;
+            if (!bare) return TR_BAIL; /* Python splits off the lead */
+        } else if (start) {
+            if (IS("body")) {
+                PyObject *ad = tr_norm_attrs(tr, pairs);
+                if (!ad) return PyErr_Occurred() ? TR_ERR : TR_BAIL;
+                if (tr_open(tr, S_body, ad, NULL)) return TR_ERR;
+                tr->frameset_ok = 0;
+                tr->mode = M_IN_BODY;
+                return TR_OK;
+            }
+            if (IS("head")) { tr->errors++; return TR_OK; }
+            if (IS("frameset") || IS("base") || IS("basefont") ||
+                IS("bgsound") || IS("link") || IS("meta") || IS("noframes") ||
+                IS("script") || IS("style") || IS("template") || IS("title"))
+                return TR_BAIL;
+        } else if (end) {
+            if (IS("template")) return TR_BAIL;
+            if (!IS("body") && !IS("html") && !IS("br")) {
+                tr->errors++;
+                return TR_OK;
+            }
+        }
+        if (tr_open(tr, S_body, PyDict_New(), NULL)) return TR_ERR;
+        tr->frameset_ok = 1;
+        tr->mode = M_IN_BODY;
+        return TR_REDISPATCH;
+    }
+    /* AfterBody / AfterAfterBody */
+    if (all_ws) {
+        Py_ssize_t par = 0;
+        if (mode == M_AFTER_BODY) {
+            par = tr_html_el(tr);
+            if (par < 0) return TR_BAIL;
+        }
+        return tr_text_to(tr, par, PyTuple_GET_ITEM(tok, 1));
+    }
+    if (k == S_eof) return TR_OK;
+    if (end && IS("html") && mode == M_AFTER_BODY) {
+        tr->mode = M_AFTER_AFTER_BODY;
+        return TR_OK;
+    }
+    tr->errors++;
+    tr->mode = M_IN_BODY;
+    return TR_REDISPATCH;
+#undef IS
+}
+
 /* one token: TR_OK handled, TR_BAIL return to Python, TR_ERR exception */
 static int tree_handle_once(Tree *tr, PyObject *tok) {
     PyObject *k = PyTuple_GET_ITEM(tok, 0);
     long mode = tr->mode;
+    if (mode == M_INITIAL || mode == M_BEFORE_HTML || mode == M_BEFORE_HEAD ||
+        mode == M_IN_HEAD || mode == M_AFTER_HEAD || mode == M_AFTER_BODY ||
+        mode == M_AFTER_AFTER_BODY)
+        return tr_preamble(tr, tok, k, mode);
     if (mode == M_TEXT) {
         if (k == S_text) return tr_text_mode_text(tr, PyTuple_GET_ITEM(tok, 1));
         if (k == S_end) {
@@ -3100,6 +3500,12 @@ static int tree_handle_once(Tree *tr, PyObject *tok) {
         return tr_body_end(tr, cname);
     }
     if (k == S_doctype) { tr->errors++; return TR_OK; }
+    if (k == S_eof && mode == M_IN_BODY) {
+        /* _in_body's EOF: nothing to do unless a template mode is open */
+        int ht = tr_pushed_has(tr, "template");
+        if (ht < 0) return TR_ERR;
+        return ht ? TR_BAIL : TR_OK;
+    }
     return TR_BAIL; /* cdata / eof */
 }
 
@@ -3110,7 +3516,7 @@ static int tree_handle_once(Tree *tr, PyObject *tok) {
  * mutated stack (e.g. "<table<svg<template<title<th<e<tbody>": the cell
  * close pops back under the svg template and process() would mis-route
  * the tbody into the SVG namespace; pure Python checks dispatch once per
- * token). tree_run reports this via statelist[7]. */
+ * token). tree_run reports this as its midbail result. */
 #define TR_BAIL_MID 3
 
 static int tree_handle(Tree *tr, PyObject *tok) {
@@ -3138,7 +3544,7 @@ static int tree_handle(Tree *tr, PyObject *tok) {
         if (slr < 0) return TR_ERR;
         if (slr > 0 || !(tr_flags_c(tr, scn) & TF_VOID)) return TR_BAIL;
     }
-    for (int hop = 0; hop < 8; hop++) {
+    for (int hop = 0; hop < 12; hop++) {
         int r = tree_handle_once(tr, tok);
         if (r == TR_BAIL && hop > 0) return TR_BAIL_MID;
         if (r != TR_REDISPATCH) return r;
@@ -3146,24 +3552,64 @@ static int tree_handle(Tree *tr, PyObject *tok) {
     return TR_BAIL_MID; /* reprocess chain too deep: let Python take it */
 }
 
-/* tree_run(s, start_byte, tok_state, rawtext_tag, shared, statelist)
+/* builder (and doc) scalars tree_run reads at entry and writes back */
+static PyObject *A_mode, *A_skip_lf, *A_frameset_ok, *A_original_mode,
+    *A_form_id, *A_has_foreign, *A_head_id, *A_base_latched, *A_doc,
+    *A_quirks, *A_errors, *A_base_uri;
+
+static int tr_get(PyObject *o, PyObject *name, long *out) {
+    PyObject *v = PyObject_GetAttr(o, name);
+    if (!v) return -1;
+    *out = PyLong_AsLong(v); /* bools are ints */
+    Py_DECREF(v);
+    return (*out == -1 && PyErr_Occurred()) ? -1 : 0;
+}
+
+static int tr_set(PyObject *o, PyObject *name, PyObject *v) {
+    if (!v) return -1;
+    int r = PyObject_SetAttr(o, name, v);
+    Py_DECREF(v);
+    return r;
+}
+
+static int tr_write_back(Tree *tr, PyObject *b, PyObject *doc) {
+    if (tr_set(b, A_mode, PyLong_FromLong(tr->mode)) ||
+        tr_set(b, A_skip_lf, PyBool_FromLong(tr->skip_lf)) ||
+        tr_set(b, A_frameset_ok, PyBool_FromLong(tr->frameset_ok)) ||
+        tr_set(b, A_original_mode, PyLong_FromLong(tr->original_mode)) ||
+        tr_set(b, A_form_id, PyLong_FromLong(tr->form_id)) ||
+        tr_set(b, A_head_id, PyLong_FromLong(tr->head_id)) ||
+        tr_set(b, A_base_latched, PyBool_FromLong(tr->base_latched)) ||
+        tr_set(doc, A_quirks, PyLong_FromLong(tr->quirks)) ||
+        tr_set(doc, A_errors, PyLong_FromLong(tr->errors)))
+        return -1;
+    if (tr->base_uri) {
+        Py_INCREF(tr->base_uri);
+        if (tr_set(doc, A_base_uri, tr->base_uri)) return -1;
+    }
+    return 0;
+}
+
+/* tree_run(s, start_byte, tok_state, rawtext_tag, shared, builder)
  *   shared: (kind, tag, attrs, text, ns, children, parent,
- *            stack, formatting, pushed_tags)
- *   statelist: [mode, skip_next_lf, frameset_ok, original_mode, form_id,
- *               errors_delta, has_foreign, midbail]
- *   midbail (out only): 1 when the FIRST bailed token was already partly
- *   handled by redispatch hops — the caller must resume it at the current
- *   mode handler (reprocess semantics), not re-enter process()
- * -> (bail_tokens_or_None, next_byte, done) */
+ *            stack, formatting, pushed_tags, pending_table_text)
+ *   builder: the HtmlTreeBuilder; its mode / skip_next_lf / frameset_ok /
+ *   original_mode / form_id / has_foreign / head_id / base_latched and its
+ *   doc's quirks / errors are read at entry and written back at exit, with
+ *   doc.base_uri when a <base href> latched
+ * -> (bail_tokens_or_None, next_byte, done, midbail)
+ *   midbail: True when the FIRST bailed token was already partly handled
+ *   by redispatch hops — the caller must resume it at the current mode
+ *   handler (reprocess semantics), not re-enter process() */
 static PyObject *py_tree_run(PyObject *self, PyObject *args) {
-    PyObject *str, *rawtag, *shared, *statel;
+    PyObject *str, *rawtag, *shared, *builder;
     Py_ssize_t start;
     int state;
-    if (!PyArg_ParseTuple(args, "OniOO!O!", &str, &start, &state, &rawtag,
-                          &PyTuple_Type, &shared, &PyList_Type, &statel))
+    if (!PyArg_ParseTuple(args, "OniOO!O", &str, &start, &state, &rawtag,
+                          &PyTuple_Type, &shared, &builder))
         return NULL;
-    if (PyTuple_GET_SIZE(shared) != 11 || PyList_GET_SIZE(statel) != 8) {
-        PyErr_SetString(PyExc_ValueError, "bad shared/state shape");
+    if (PyTuple_GET_SIZE(shared) != 11) {
+        PyErr_SetString(PyExc_ValueError, "bad shared shape");
         return NULL;
     }
     Py_ssize_t n;
@@ -3171,7 +3617,7 @@ static PyObject *py_tree_run(PyObject *self, PyObject *args) {
     if (!s) return NULL;
 
     Tree tr;
-    memset(&tr.tc, 0, sizeof(tr.tc));
+    memset(&tr, 0, sizeof(tr));
     tr.kind = PyTuple_GET_ITEM(shared, 0);
     tr.tag = PyTuple_GET_ITEM(shared, 1);
     tr.attrs = PyTuple_GET_ITEM(shared, 2);
@@ -3183,19 +3629,28 @@ static PyObject *py_tree_run(PyObject *self, PyObject *args) {
     tr.formatting = PyTuple_GET_ITEM(shared, 8);
     tr.pushed = PyTuple_GET_ITEM(shared, 9);
     tr.pending = PyTuple_GET_ITEM(shared, 10);
-    tr.mode = PyLong_AsLong(PyList_GET_ITEM(statel, 0));
-    tr.skip_lf = PyLong_AsLong(PyList_GET_ITEM(statel, 1));
-    tr.frameset_ok = PyLong_AsLong(PyList_GET_ITEM(statel, 2));
-    tr.original_mode = PyLong_AsLong(PyList_GET_ITEM(statel, 3));
-    tr.form_id = PyLong_AsLong(PyList_GET_ITEM(statel, 4));
-    tr.errors = PyLong_AsLong(PyList_GET_ITEM(statel, 5));
-    tr.has_foreign = PyLong_AsLong(PyList_GET_ITEM(statel, 6));
+    PyObject *doc = PyObject_GetAttr(builder, A_doc);
+    if (!doc) return NULL;
+    if (tr_get(builder, A_mode, &tr.mode) ||
+        tr_get(builder, A_skip_lf, &tr.skip_lf) ||
+        tr_get(builder, A_frameset_ok, &tr.frameset_ok) ||
+        tr_get(builder, A_original_mode, &tr.original_mode) ||
+        tr_get(builder, A_form_id, &tr.form_id) ||
+        tr_get(builder, A_has_foreign, &tr.has_foreign) ||
+        tr_get(builder, A_head_id, &tr.head_id) ||
+        tr_get(builder, A_base_latched, &tr.base_latched) ||
+        tr_get(doc, A_quirks, &tr.quirks) ||
+        tr_get(doc, A_errors, &tr.errors)) {
+        Py_DECREF(doc);
+        return NULL;
+    }
 
     Tok t;
     memset(&t, 0, sizeof(t));
     t.s = s; t.n = n; t.p = start; t.state = state;
+    tr.tok = &t;
     t.out = PyList_New(0);
-    if (!t.out) return NULL;
+    if (!t.out) { Py_DECREF(doc); return NULL; }
     /* small pump batches: a bail returns every already-tokenized-but-
      * unhandled token to Python, so large batches would push C-handleable
      * tokens through the slow path whenever a rare token bails mid-batch */
@@ -3206,11 +3661,13 @@ static PyObject *py_tree_run(PyObject *self, PyObject *args) {
     if (t.rawtext_tag) {
         Py_ssize_t tl;
         const char *tb = PyUnicode_AsUTF8AndSize(t.rawtext_tag, &tl);
-        if (!tb) { Py_DECREF(t.out); return NULL; }
+        if (!tb) { Py_DECREF(t.out); Py_DECREF(doc); return NULL; }
         char *nd = needle_stack;
         if (tl + 2 > (Py_ssize_t)sizeof(needle_stack)) {
             needle_heap = (char *)PyMem_Malloc((size_t)(tl + 2));
-            if (!needle_heap) { Py_DECREF(t.out); return PyErr_NoMemory(); }
+            if (!needle_heap) {
+                Py_DECREF(t.out); Py_DECREF(doc); return PyErr_NoMemory();
+            }
             nd = needle_heap;
         }
         nd[0] = '<'; nd[1] = '/';
@@ -3268,27 +3725,23 @@ static PyObject *py_tree_run(PyObject *self, PyObject *args) {
     if (needle_heap) PyMem_Free(needle_heap);
     PyMem_Free(t.buf);
     Py_DECREF(t.out);
-    /* write back scalars */
-    {
-        long vals[8] = {tr.mode, tr.skip_lf, tr.frameset_ok,
-                        tr.original_mode, tr.form_id, tr.errors,
-                        tr.has_foreign, midbail};
-        for (int j = 0; j < 8; j++) {
-            PyObject *v = PyLong_FromLong(vals[j]);
-            if (!v) { Py_XDECREF(bail); return NULL; }
-            if (PyList_SetItem(statel, j, v)) { Py_XDECREF(bail); return NULL; }
-        }
-    }
+    int wb = tr_write_back(&tr, builder, doc);
+    Py_DECREF(doc);
+    Py_XDECREF(tr.base_uri);
+    if (wb) { Py_XDECREF(bail); return NULL; }
     if (!bail) {
         bail = Py_None;
         Py_INCREF(bail);
     }
-    return Py_BuildValue("(NnO)", bail, t.p, done ? Py_True : Py_False);
+    return Py_BuildValue("(NnOO)", bail, t.p, done ? Py_True : Py_False,
+                         midbail ? Py_True : Py_False);
 
 fail:
     if (needle_heap) PyMem_Free(needle_heap);
     PyMem_Free(t.buf);
     Py_DECREF(t.out);
+    Py_DECREF(doc);
+    Py_XDECREF(tr.base_uri);
     Py_XDECREF(bail);
     return NULL;
 }
@@ -3446,10 +3899,12 @@ static PyMethodDef Methods[] = {
     {"norm_ws", py_norm_ws, METH_VARARGS,
      "norm_ws(s, strip_leading) -> normalized-whitespace str"},
     {"set_tree_modes", py_set_tree_modes, METH_VARARGS,
-     "set_tree_modes(in_body, in_cell, in_caption, text)"},
+     "set_tree_modes(in_body, in_cell, in_caption, text, in_table,"
+     " in_table_body, in_row, in_table_text, initial, before_html,"
+     " before_head, in_head, after_head, after_body, after_after_body)"},
     {"tree_run", py_tree_run, METH_VARARGS,
-     "tree_run(s, start_byte, state, rawtext_tag, shared, statelist)"
-     " -> (bail_tokens_or_None, next_byte, done)"},
+     "tree_run(s, start_byte, state, rawtext_tag, shared, builder)"
+     " -> (bail_tokens_or_None, next_byte, done, midbail)"},
     {"element_text", py_element_text, METH_VARARGS,
      "element_text(kind, tag, text, children, root) -> normalized text"},
     {"extract_spans", py_extract_spans, METH_VARARGS,
@@ -3480,6 +3935,30 @@ PyMODINIT_FUNC PyInit__ksoup_ctok(void) {
     S_video = PyUnicode_InternFromString("video");
     S_object = PyUnicode_InternFromString("object");
     if (!S_image || !S_video || !S_object) return NULL;
+    S_title = PyUnicode_InternFromString("title");
+    S_style = PyUnicode_InternFromString("style");
+    S_noframes = PyUnicode_InternFromString("noframes");
+    S_html = PyUnicode_InternFromString("html");
+    S_head = PyUnicode_InternFromString("head");
+    S_body = PyUnicode_InternFromString("body");
+    S_href = PyUnicode_InternFromString("href");
+    A_mode = PyUnicode_InternFromString("mode");
+    A_skip_lf = PyUnicode_InternFromString("skip_next_lf");
+    A_frameset_ok = PyUnicode_InternFromString("frameset_ok");
+    A_original_mode = PyUnicode_InternFromString("original_mode");
+    A_form_id = PyUnicode_InternFromString("form_id");
+    A_has_foreign = PyUnicode_InternFromString("has_foreign");
+    A_head_id = PyUnicode_InternFromString("head_id");
+    A_base_latched = PyUnicode_InternFromString("base_latched");
+    A_doc = PyUnicode_InternFromString("doc");
+    A_quirks = PyUnicode_InternFromString("quirks");
+    A_errors = PyUnicode_InternFromString("errors");
+    A_base_uri = PyUnicode_InternFromString("base_uri");
+    if (!S_title || !S_style || !S_noframes || !S_html || !S_head ||
+        !S_body || !S_href || !A_mode || !A_skip_lf || !A_frameset_ok ||
+        !A_original_mode || !A_form_id || !A_has_foreign || !A_head_id ||
+        !A_base_latched || !A_doc || !A_quirks || !A_errors || !A_base_uri)
+        return NULL;
     if (!S_text || !S_start || !S_end || !S_comment || !S_cdata ||
         !S_doctype || !S_eof || !S_script || !S_empty)
         return NULL;

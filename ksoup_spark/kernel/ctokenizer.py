@@ -332,7 +332,9 @@ def tree_module():
 
         mod.set_tree_modes(tb.IN_BODY, tb.IN_CELL, tb.IN_CAPTION, tb.TEXT,
                            tb.IN_TABLE, tb.IN_TABLE_BODY, tb.IN_ROW,
-                           tb.IN_TABLE_TEXT)
+                           tb.IN_TABLE_TEXT, tb.INITIAL, tb.BEFORE_HTML,
+                           tb.BEFORE_HEAD, tb.IN_HEAD, tb.AFTER_HEAD,
+                           tb.AFTER_BODY, tb.AFTER_AFTER_BODY)
         _tree_ready = True
     return mod
 

@@ -28,6 +28,14 @@ def _is_abs_url(url: str) -> bool:
     return len(url) > 2 and ":" in url
 
 
+def _strip_ctl(url: str | None) -> str:
+    # isprintable() is False for every control char, so the sub runs only
+    # when there may be one to strip
+    if not url:
+        return ""
+    return url if url.isprintable() else _URL_CTL.sub("", url)
+
+
 def resolve_url(base: str, rel: str) -> str:
     """StringUtil.resolve (internal/StringUtil.kt:226-237 +
     internal/URLUtil.kt:6-73): strip ASCII control chars from both inputs,
@@ -35,19 +43,58 @@ def resolve_url(base: str, rel: str) -> str:
     ``rel`` is empty, and "" when neither side is absolute. The RFC 3986
     merge itself is stdlib urljoin, which matches the reference's
     normalization on its own published test table (StringUtilTest.kt
-    resolvesRelativeUrls, replayed in tests/test_kernel_stringutil_ref.py)."""
-    base = _URL_CTL.sub("", base) if base else ""
-    rel = _URL_CTL.sub("", rel) if rel else ""
+    resolvesRelativeUrls, replayed in tests/test_kernel_stringutil_ref.py).
+
+    The common media-ref shape — a plain relative path against an http(s)
+    base with a plain path — skips urljoin: ``_plain_join`` returns the
+    base up to its last "/" plus ``rel``, which is exactly what urljoin
+    returns for those inputs (a differential property test pins it)."""
+    base = _strip_ctl(base)
+    rel = _strip_ctl(rel)
     if not rel:
         return base
     if _is_abs_url(rel):
         return rel
     if not _is_abs_url(base):
         return ""
+    joined = _plain_join(base, rel)
+    if joined is not None:
+        return joined
     try:
         return urljoin(base, rel)
     except ValueError:
         return ""
+
+
+def _plain_join(base: str, rel: str) -> str | None:
+    """``base[:last "/" + 1] + rel`` when that is urljoin's answer: a
+    lower-case http(s) base with an ASCII host and a path, neither holding
+    ? # ; (query, fragment, params), IPv6 brackets or empty / dot segments,
+    and a relative path with no leading space or "/", none of \\ ? # ; :,
+    and no empty or dot segments. None when any condition fails. Both
+    inputs come without control chars (``_strip_ctl``)."""
+    if base.startswith("http://"):
+        h = 7
+    elif base.startswith("https://"):
+        h = 8
+    else:
+        return None
+    slash = base.find("/", h)
+    if slash <= h or not base[h:slash].isascii():
+        return None
+    rest = base[h:]  # host + path
+    for bad in ("?", "#", ";", "[", "]", "//"):
+        if bad in rest:
+            return None
+    if not rel or rel[0] in " /":
+        return None
+    for bad in ("\\", "?", "#", ";", ":", "//"):
+        if bad in rel:
+            return None
+    for path in (rest + "/", "/" + rel + "/"):
+        if "/./" in path or "/../" in path:  # a dot segment
+            return None
+    return base[:base.rindex("/") + 1] + rel
 
 
 DOCUMENT = 0

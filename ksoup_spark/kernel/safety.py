@@ -228,42 +228,47 @@ def clean(doc: Doc, safelist: Safelist, root: int | None = None) -> Doc:
     body = out.new_node(dom.ELEMENT, "body", {})
     out.append_child(html_el, body)
     num_discarded = 0
-
-    def walk(src: int, dst: int) -> None:
-        nonlocal num_discarded
-        for c in doc.children[src]:
-            k = doc.kind[c]
-            if k == dom.TEXT or k == dom.CDATA:
-                nid = out.new_node(dom.TEXT, text=doc.text[c])
-                out.append_child(dst, nid)
-            elif k == dom.ELEMENT:
-                tag = doc.tag[c] or ""
-                if safelist.is_safe_tag(tag):
-                    attrs = {}
-                    preserve_rel = getattr(safelist, "_preserve_relative", False)
-                    for ak, av in (doc.attrs[c] or {}).items():
-                        protos = safelist.protocols.get((tag, ak))
-                        abs_v = doc.abs_url(c, ak) if protos else None
-                        if safelist.is_safe_attr(tag, ak, av, abs_v):
-                            # testValidProtocol (Safelist.kt:435): unless
-                            # preserveRelativeLinks, the kept value is the
-                            # resolved one
-                            if protos and not preserve_rel and abs_v:
-                                attrs[ak] = abs_v
-                            else:
-                                attrs[ak] = av
+    preserve_rel = getattr(safelist, "_preserve_relative", False)
+    # preorder over an explicit stack of (children iterator, kept parent):
+    # depth is bounded by memory, not by the recursion limit
+    stack = [(iter(doc.children[root]), body)]
+    while stack:
+        kids, dst = stack[-1]
+        c = next(kids, -1)
+        if c == -1:
+            stack.pop()
+            continue
+        k = doc.kind[c]
+        if k == dom.TEXT or k == dom.CDATA:
+            nid = out.new_node(dom.TEXT, text=doc.text[c])
+            out.append_child(dst, nid)
+        elif k == dom.ELEMENT:
+            tag = doc.tag[c] or ""
+            if safelist.is_safe_tag(tag):
+                attrs = {}
+                for ak, av in (doc.attrs[c] or {}).items():
+                    protos = safelist.protocols.get((tag, ak))
+                    abs_v = doc.abs_url(c, ak) if protos else None
+                    if safelist.is_safe_attr(tag, ak, av, abs_v):
+                        # testValidProtocol (Safelist.kt:435): unless
+                        # preserveRelativeLinks, the kept value is the
+                        # resolved one
+                        if protos and not preserve_rel and abs_v:
+                            attrs[ak] = abs_v
                         else:
-                            num_discarded += 1
-                    attrs.update(safelist.enforced.get(tag, {}))
-                    nid = out.new_node(dom.ELEMENT, tag, attrs)
-                    out.append_child(dst, nid)
-                    walk(c, nid)
-                else:
-                    num_discarded += 1
-                    walk(c, dst)  # promote children to kept ancestor
-            # comments / data / doctypes are dropped
+                            attrs[ak] = av
+                    else:
+                        num_discarded += 1
+                attrs.update(safelist.enforced.get(tag, {}))
+                nid = out.new_node(dom.ELEMENT, tag, attrs)
+                out.append_child(dst, nid)
+                stack.append((iter(doc.children[c]), nid))
+            else:
+                num_discarded += 1
+                # promote children to the kept ancestor
+                stack.append((iter(doc.children[c]), dst))
+        # comments / data / doctypes are dropped
 
-    walk(root, body)
     out.errors = num_discarded
     return out
 

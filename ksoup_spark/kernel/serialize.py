@@ -335,66 +335,101 @@ def _self_closes(doc: Doc, node: int) -> bool:
 
 
 def _emit(doc: Doc, node: int, depth: int, out: list[str], pretty: bool) -> None:
-    k = doc.kind[node]
-    if k == dom.DOCUMENT:
-        for c in doc.children[node]:
-            _emit(doc, c, depth, out, pretty)
-        return
-    if k == dom.ELEMENT:
-        if doc.pseudo is not None and node in doc.pseudo:
-            # PseudoTextElement serializes transparently (children only) —
-            # outerHtmlHead/Tail are no-ops (nodes/PseudoTextElement.kt:12-24)
-            for c in doc.children[node]:
-                _emit(doc, c, depth, out, pretty)
-            return
-        norm_tag = doc.tag[node] or ""
-        tag = norm_tag
-        if doc.tag_display is not None:
-            # ParseSettings.preserveCase: serialize source-cased names;
-            # matching/layout/void decisions still use the normalized name
-            tag = doc.tag_display.get(node, tag)
-        if _should_indent(doc, node, pretty) and out:
-            out.append(_indent_str(depth))
-        xml_attrs = doc.ns[node] == dom.NS_XML or _OUT_SYNTAX == "xml"
-        out.append(f"<{tag}{_attrs_html(doc.attrs[node], xml_attrs)}")
-        kids = doc.children[node]
-        if doc.ns[node] == dom.NS_XML:
-            # XML-parsed docs keep their parse-time serialization: only
-            # tags seen self-closing collapse; voids keep children
-            if not kids and doc.self_closing and norm_tag in doc.self_closing:
-                out.append(" />")
-                return
-            if not kids:
-                out.append("></" + tag + ">")
-                return
-        elif not kids and (_self_closes(doc, node)
-                           or (norm_tag in VOID_TAGS)):
-            # Element.outerHtmlHead (Element.kt:1665-1674): childless
-            # self-closing: ">" under html syntax for true voids,
-            # " />" otherwise (incl. the whole xml syntax)
-            if _OUT_SYNTAX == "html" and norm_tag in VOID_TAGS:
-                out.append(">")
-            else:
-                out.append(" />")
-            return
-        out.append(">")
-        for c in kids:
-            _emit(doc, c, depth + 1, out, pretty)
-        # Element.outerHtmlTail (Element.kt:1679-1694)
-        if pretty and kids and (
-            (format_as_block(norm_tag)
-             and not (doc.parent[node] != -1
-                      and _preserves_ws(doc, doc.parent[node])))
-            or (_OUT_OUTLINE and (len(kids) > 1 or (
-                len(kids) == 1 and doc.kind[kids[0]] == dom.ELEMENT))
-                # the indent lands INSIDE this element's content: under a
-                # whitespace-preserving element it would become literal
-                # text on reparse and grow on every reprint
-                and not _preserves_ws(doc, node))
-        ):
-            out.append(_indent_str(depth))
-        out.append(f"</{tag}>")
-        return
+    """Serialize ``node``'s subtree into ``out``: a preorder walk over an
+    explicit stack, so depth is bounded by memory, not by the interpreter's
+    recursion limit. An element's closing tag is a stack entry of its own,
+    popped after its children."""
+    stack = [(node, depth, False)]
+    pop = stack.pop
+    push = stack.append
+    while stack:
+        node, depth, close = pop()
+        if close:
+            _emit_close(doc, node, depth, out, pretty)
+            continue
+        k = doc.kind[node]
+        if k == dom.DOCUMENT or (k == dom.ELEMENT and doc.pseudo is not None
+                                 and node in doc.pseudo):
+            # the document, and a PseudoTextElement, serialize transparently
+            # (children only) — outerHtmlHead/Tail are no-ops
+            # (nodes/PseudoTextElement.kt:12-24)
+            stack.extend((c, depth, False) for c in reversed(doc.children[node]))
+            continue
+        if k == dom.ELEMENT:
+            if _emit_open(doc, node, depth, out, pretty):
+                push((node, depth, True))
+                stack.extend((c, depth + 1, False)
+                             for c in reversed(doc.children[node]))
+            continue
+        _emit_leaf(doc, node, k, depth, out, pretty)
+
+
+def _display_tag(doc: Doc, node: int) -> str:
+    tag = doc.tag[node] or ""
+    if doc.tag_display is not None:
+        # ParseSettings.preserveCase: serialize source-cased names;
+        # matching/layout/void decisions still use the normalized name
+        tag = doc.tag_display.get(node, tag)
+    return tag
+
+
+def _emit_open(doc: Doc, node: int, depth: int, out: list[str],
+               pretty: bool) -> bool:
+    """Element.outerHtmlHead; True when the element has content and a
+    closing tag to come, False when the head closed it."""
+    norm_tag = doc.tag[node] or ""
+    tag = _display_tag(doc, node)
+    if _should_indent(doc, node, pretty) and out:
+        out.append(_indent_str(depth))
+    xml_attrs = doc.ns[node] == dom.NS_XML or _OUT_SYNTAX == "xml"
+    out.append(f"<{tag}{_attrs_html(doc.attrs[node], xml_attrs)}")
+    kids = doc.children[node]
+    if doc.ns[node] == dom.NS_XML:
+        # XML-parsed docs keep their parse-time serialization: only
+        # tags seen self-closing collapse; voids keep children
+        if not kids and doc.self_closing and norm_tag in doc.self_closing:
+            out.append(" />")
+            return False
+        if not kids:
+            out.append("></" + tag + ">")
+            return False
+    elif not kids and (_self_closes(doc, node)
+                       or (norm_tag in VOID_TAGS)):
+        # Element.outerHtmlHead (Element.kt:1665-1674): childless
+        # self-closing: ">" under html syntax for true voids,
+        # " />" otherwise (incl. the whole xml syntax)
+        if _OUT_SYNTAX == "html" and norm_tag in VOID_TAGS:
+            out.append(">")
+        else:
+            out.append(" />")
+        return False
+    out.append(">")
+    return True
+
+
+def _emit_close(doc: Doc, node: int, depth: int, out: list[str],
+                pretty: bool) -> None:
+    """Element.outerHtmlTail (Element.kt:1679-1694)."""
+    norm_tag = doc.tag[node] or ""
+    kids = doc.children[node]
+    if pretty and kids and (
+        (format_as_block(norm_tag)
+         and not (doc.parent[node] != -1
+                  and _preserves_ws(doc, doc.parent[node])))
+        or (_OUT_OUTLINE and (len(kids) > 1 or (
+            len(kids) == 1 and doc.kind[kids[0]] == dom.ELEMENT))
+            # the indent lands INSIDE this element's content: under a
+            # whitespace-preserving element it would become literal
+            # text on reparse and grow on every reprint
+            and not _preserves_ws(doc, node))
+    ):
+        out.append(_indent_str(depth))
+    out.append(f"</{_display_tag(doc, node)}>")
+
+
+def _emit_leaf(doc: Doc, node: int, k: int, depth: int, out: list[str],
+               pretty: bool) -> None:
+    """Text, data, cdata, comment, doctype and XML-declaration nodes."""
     if k in (dom.TEXT,):
         # TextNode.outerHtmlHead (TextNode.kt:61-93)
         t = doc.text[node] or ""

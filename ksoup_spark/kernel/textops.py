@@ -327,8 +327,11 @@ def extract_spans(doc: Doc, root: int | None = None) -> list[tuple]:
 
     Hot path: the C mirror in _ctok_src.c (py_extract_spans) runs the DFS
     and returns media spans carrying node ids; refs are resolved here
-    (absUrl + <video><source> fallback — media spans are rare). Any C-side
-    failure falls back to the pure-Python DFS below.
+    (absUrl + <video><source> fallback). A typical page has a few media
+    spans, each a plain relative path against an http(s) ``<base href>``:
+    ``dom.resolve_url`` joins those by string slicing, and urljoin runs
+    only for the rest. Any C-side failure falls back to the pure-Python
+    DFS below.
     """
     if root is None:
         root = doc.body()

@@ -300,45 +300,33 @@ class HtmlTreeBuilder:
     def _parse_ctree(self, mod) -> None:
         """Main parse loop over the C tree-construction engine.
 
-        tree_run processes the common insertion-mode cases directly in C,
-        mutating the SAME doc/stack/formatting lists this builder owns;
-        tokens outside the handled subset come back as tuples and run
-        through the full Python process() — then the loop re-enters C with
-        whatever mode/tokenizer state those handlers set. Scalars travel in
-        an 8-slot state list, synced both ways around each call. st[7]
-        (out only) flags a MID-CHAIN bail: C already ran part of the
-        token's redispatch chain (cell close / row exit / table-text
-        flush), so the first bailed token must resume at the current mode
-        handler — reprocess() semantics — NOT re-enter process(), whose
-        foreign-content dispatch would re-run against the mutated stack."""
+        tree_run handles the common insertion-mode cases directly in C,
+        from the document preamble (doctype, html/head/title/base/meta/link,
+        body) through the body modes to the postamble (</body>, </html>,
+        EOF), mutating the SAME doc/stack/formatting lists this builder
+        owns, and reading and writing the builder's scalar state (mode,
+        frameset_ok, head_id, base_latched, ...) and the doc's quirks /
+        errors / base_uri itself. A typical document is one tree_run call
+        and no process() call. Tokens outside the handled subset come back
+        as tuples and run through the full Python process() — then the loop
+        re-enters C with whatever mode/tokenizer state those handlers set.
+        ``midbail`` flags a MID-CHAIN bail: C already ran part of the first
+        bailed token's redispatch chain (implied html/head/body, cell close,
+        row exit, table-text flush), so that token must resume at the
+        current mode handler — reprocess() semantics — NOT re-enter
+        process(), whose foreign-content dispatch would re-run against the
+        mutated stack."""
         d = self.doc
         tok = self.tok  # CTokenizer: carries .state/.rawtext_tag for handlers
         html = tok.s
         shared = (d.kind, d.tag, d.attrs, d.text, d.ns, d.children,
                   d.parent, self.stack, self.formatting, self.pushed_tags,
                   self.pending_table_text)
-        st = [0, 0, 0, 0, 0, 0, 0, 0]
         bp = 0
-        process = self.process
         tree_run = mod.tree_run
         while True:
-            st[0] = self.mode
-            st[1] = 1 if self.skip_next_lf else 0
-            st[2] = 1 if self.frameset_ok else 0
-            st[3] = self.original_mode
-            st[4] = self.form_id
-            st[5] = 0
-            st[6] = 1 if self.has_foreign else 0
-            st[7] = 0
-            toks, bp, done = tree_run(html, bp, tok.state, tok.rawtext_tag,
-                                      shared, st)
-            self.mode = st[0]
-            self.skip_next_lf = bool(st[1])
-            self.frameset_ok = bool(st[2])
-            self.original_mode = st[3]
-            self.form_id = st[4]
-            if st[5]:
-                d.errors += st[5]
+            toks, bp, done, midbail = tree_run(
+                html, bp, tok.state, tok.rawtext_tag, shared, self)
             # C always returns in DATA; bail-token handlers may set the
             # rawtext/RCDATA state for the next entry (same contract as
             # CTokenizer.next_batch)
@@ -346,13 +334,11 @@ class HtmlTreeBuilder:
             tok.rawtext_tag = None
             if toks:
                 start = 0
-                if st[7]:
-                    # mid-chain bail: finish the first token at the mode
-                    # handler C left us in (reprocess semantics)
+                if midbail:
                     self._dispatch(toks[0], self.mode)
                     start = 1
                 for ti in range(start, len(toks)):
-                    process(toks[ti])
+                    self.process(toks[ti])
             if done:
                 break
 

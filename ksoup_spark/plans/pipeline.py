@@ -41,12 +41,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel.textops import extract_spans
+from ..kernel.treebuilder import parse
 from ..operators.boundary import map_docs
-from ..operators.extract import (
-    SPANS_SCHEMA,
-    assemble_html,
-    extract_spans_from_html,
-)
+from ..operators.extract import SPANS_SCHEMA, assemble_html, spans_to_rows
 
 METRICS_SCHEMA = StructType(
     [
@@ -72,11 +70,16 @@ COUNTED_SPANS_SCHEMA = StructType(
 def extract_counted_spans(spans: list) -> tuple:
     """One doc's output spans plus the counts its commit row sums:
     spans, code points of non-NULL text (Spark's ``length``), and spans
-    whose kind is not "text"."""
-    out = extract_spans_from_html(assemble_html(spans))
-    n_chars = sum(len(s["text"]) for s in out if s["text"] is not None)
-    n_media = sum(s["kind"] != "text" for s in out)
-    return out, len(out), n_chars, n_media
+    whose kind is not "text" — counted in one pass over the kernel's span
+    tuples, before they become row dicts."""
+    raw = extract_spans(parse(assemble_html(spans)))
+    n_chars = n_media = 0
+    for kind, text, _, _ in raw:
+        if text is not None:
+            n_chars += len(text)
+        if kind != "text":
+            n_media += 1
+    return spans_to_rows(raw), len(raw), n_chars, n_media
 
 
 def with_part(docs: DataFrame, num_parts: int) -> DataFrame:

@@ -24,7 +24,9 @@ import sys
 import textwrap
 import zipimport
 
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StringType, StructField, StructType
 
 import ksoup_spark
@@ -143,6 +145,77 @@ def test_operator_null_reads_as_empty(spark, name):
         rows[d.pop(key)].append(d)
     assert rows["real"]
     assert rows["null"] == rows["empty"]
+
+
+def _list_struct_sites(spark) -> dict:
+    """site -> Arrow input type, for every site above whose input column is
+    a list<struct> (the null-rule tables: OPERATORS, the column functions
+    over ``_HTML``, and the streaming span UDF over the spans frame)."""
+    col_types = {name: op[0] for name, op in OPERATORS.items()}
+    col_types.update({name: "string" for name in COLUMN_FNS})
+    col_types["extract_spans_col"] = OPERATORS["extract_spans_df"][0]
+    sites = {}
+    for name, ct in col_types.items():
+        dt = spark.createDataFrame([], f"v {ct}").schema["v"].dataType
+        t = to_arrow_type(dt)
+        if pa.types.is_list(t) and pa.types.is_struct(t.value_type):
+            sites[name] = t
+    return sites
+
+
+def _struct_value(t: pa.DataType, rng):
+    if pa.types.is_string(t):
+        return rng.choice([None, "", "a", "<p>x &amp; y</p>", "中文"])
+    if pa.types.is_integer(t):
+        return rng.choice([None, 0, 3, -5, 2**31 - 1])
+    raise AssertionError(f"no generator for {t}")
+
+
+def _struct_rows(t: pa.DataType, rng, n: int) -> list:
+    """n rows of list<struct> values with NULL lists, NULL struct elements
+    and NULL fields mixed in."""
+    fields = list(t.value_type)
+    rows = []
+    for _ in range(n):
+        if rng.random() < 0.15:
+            rows.append(None)
+            continue
+        rows.append([
+            None if rng.random() < 0.15 else
+            {f.name: _struct_value(f.type, rng) for f in fields}
+            for _ in range(rng.randint(0, 5))])
+    return rows
+
+
+def _decoded(col: pa.Array) -> list:
+    """to_pylist with the boundary's NULL-as-empty rule."""
+    return [[] if r is None else r for r in col.to_pylist()]
+
+
+def test_struct_list_decode_matches_to_pylist(spark):
+    """The flattened list<struct> decode equals ``to_pylist`` (NULL list
+    read as []) at every list<struct> site: on sliced batches, NULL lists
+    (including ones backed by non-empty child ranges), NULL struct elements,
+    NULL fields and empty batches."""
+    import random
+
+    sites = _list_struct_sites(spark)
+    assert {"extract_spans_df", "extract_spans_col"} <= set(sites)
+    rng = random.Random(20261019)
+    for name, t in sites.items():
+        arr = pa.array(_struct_rows(t, rng, 64), type=t)
+        assert arr.null_count and arr.values.null_count
+        batch = pa.RecordBatch.from_arrays([arr], ["v"])
+        cols = [arr, arr.slice(1), arr.slice(7, 13), arr.slice(61),
+                arr.slice(5, 0), pa.array([], type=t),
+                batch.slice(9, 20).column(0), batch.slice(64).column(0)]
+        # NULL lists whose offsets still span child elements
+        vals = arr.flatten()
+        cols.append(pa.ListArray.from_arrays(
+            pa.array([0, 2, 4, 4, len(vals)], pa.int32()), vals,
+            type=t, mask=pa.array([False, True, False, True])))
+        for col in cols:
+            assert boundary._values(col) == _decoded(col), (name, col.offset)
 
 
 _BOUNDARY = {"mapInArrow", "mapInPandas", "pandas_udf", "arrow_udf"}

@@ -1,13 +1,14 @@
 """Differential parity: C tree-construction engine vs the pure-Python
 tree builder.
 
-tree_run (in _ctok_src.c) handles the common InBody/InCell/InCaption/Text
-insertion-mode cases in C, mutating the same lists the Python builder owns,
-and bails everything else back to Python. These tests pin WHOLE-TREE
+tree_run (in _ctok_src.c) handles the common insertion-mode cases in C —
+the document preamble and postamble, InBody/InCell/InCaption/Text and the
+table modes — mutating the same lists the Python builder owns, and bails
+everything else back to Python. These tests pin WHOLE-TREE
 equality (every parallel node list + errors + doc fields) between a parse
 with the engine on and one with KSOUP_SPARK_NO_CTREE=1, across the
-sf0.01 corpus pages, a fixed-seed slice of the fuzz campaign's tag soup,
-and targeted cases for every C-handled branch.
+sf0.01 corpus pages, fixed-seed slices of the fuzz campaign's tag soup and
+page-shaped documents, and targeted cases for every C-handled branch.
 """
 
 from __future__ import annotations
@@ -157,9 +158,136 @@ CASES = [
 ]
 
 
-@pytest.mark.parametrize("html", CASES, ids=range(len(CASES)))
+# the document preamble and postamble (Initial .. AfterHead, AfterBody,
+# AfterAfterBody), handled in C for the common tokens
+PREAMBLE_CASES = [
+    # doctypes: standards (C) and (limited) quirks (Python)
+    "<!DOCTYPE html><html><head><title>t</title></head><body>x</body></html>",
+    "<!doctype HTML>x",
+    '<!DOCTYPE html SYSTEM "about:legacy-compat"><p>x',
+    '<!DOCTYPE HTML PUBLIC "-//W3C//DTD HTML 4.01 Transitional//EN"><p>x',
+    '<!DOCTYPE html PUBLIC "-//W3C//DTD XHTML 1.0 Transitional//EN" '
+    '"http://www.w3.org/TR/xhtml1/DTD/xhtml1-transitional.dtd"><p>x',
+    '<!DOCTYPE html SYSTEM '
+    '"http://www.ibm.com/data/dtd/v11/ibmxhtml1-transitional.dtd"><p>x',
+    "<!DOCTYPE><p>x", "<!doctype html5><p>x", "<!doctype html><!doctype html>",
+    # comments and whitespace around the scaffolding
+    "  \n<!-- c --> <!--d--><html> <!-- e --><head> <!--f--> </head> <!--g-->"
+    " <body>x</body> <!--h--> </html> <!--i-->\n",
+    "<!--only-->", " ", "", "x", "\n\t<p>x",
+    # head content
+    "<html><head><meta charset=utf-8><link rel=stylesheet href=s.css>"
+    "<script>var a = '</div>';</script><style>p{}</style>"
+    "<noscript><p>n</p></noscript></head><body>b",
+    "<head><noframes><p>n</noframes><title>t</title></head>x",
+    "<head><script><!--<script>x</script>--></script></head>y",
+    "<head><template><p>t</p></template></head>x",
+    "<head><![CDATA[c]]></head>x",
+    # text in head: bare (C) and after leading whitespace (Python split)
+    "<html><head>text<title>t</title></head><body>b",
+    "<head> \n lead text</head>x",
+    "<html><head></head>late text<body>b",
+    "<html><head></head>  \n late<body>b",
+    # base: the first href latches, later ones do not
+    "<head><base href='http://a.example/x/'><base href='http://b.example/y/'>"
+    "</head><img src=i.png>",
+    "<head><base target=_blank><base href=''><base href='http://c.example/'>"
+    "</head><img src=i.png>",
+    # missing html / head / body tags
+    "<title>t</title><p>x", "<head><title>t</title>x", "<html><p>x",
+    "<body>x", "<html><body></body>", "<html><head><title>x",
+    "<html>", "<html><head>", "<html><head></head>", "<html></html>",
+    # stray and repeated end tags in the preamble
+    "</p><html></br><head></div></head></p><body>x",
+    "<html><head></head></head></p><body>x</body></html>",
+    "<html></html></body>x", "</head></body></html>stray",
+    # uppercase
+    "<HTML><HEAD><TITLE>T</TITLE><BASE HREF='http://u.example/'>"
+    "<META NAME=d></HEAD><BODY CLASS=b>X</BODY></HTML>",
+    # attributes on a repeated <html> / <body> merge, first value wins
+    "<html lang=en><head></head><body class=a><html lang=fr data-x=1>"
+    "<body class=b id=c>x</body></html>",
+    "<html a=1><head><html b=2></head><html c=3><body><html d=4>x</body>"
+    "<html e=5></html><html f=6>",
+    "<body><template><html x=1><body y=2></template>",
+    # </title lookalikes and entities in the title
+    "<title>a &amp; b </titlex> &lt; </title > c</title><p>x",
+    "<title>unterminated &lt;b", "<title>a</title\tfoo>b",
+    "<title>x</TITLE>y", "<title>&notin; &#x41; &nbsp;</title>",
+    # head elements after </head>, frameset
+    "<html><head></head><meta name=a><title>late</title><body>x",
+    "<html><head></head><frameset><frame></frameset></html>",
+    # the postamble: whitespace, comments, late content
+    "<body>x</body> \n<!--after body-->  </html>\n <!--after html--> more",
+    "<body>x</body><p>late</p></html><div>later</div>",
+    "<body>x</body></html><!doctype html><html z=1></html>",
+]
+
+
+@pytest.mark.parametrize("html", CASES + PREAMBLE_CASES,
+                         ids=range(len(CASES) + len(PREAMBLE_CASES)))
 def test_tree_parity_cases(html):
     parse_both(html)
+
+
+def _bench_page(i: int) -> str:
+    """The benchmark's extraction doc shape (the corpus wrapper's head,
+    one of three body shapes by ``i % 3``, a media element, the tail),
+    written out as the kernel's assembled HTML."""
+    sid = f"doc-{i:08d}"
+    words = "spark join key table row data query".split()
+    head = (f'<html><head><title>Doc {sid}</title><base href="'
+            f'http://corpus.example/{sid}/"></head><body>'
+            f'<div id="main" class="content doc">')
+    ref = f"media/{sid}.bin"
+    body, media = [
+        ("<p>" + " ".join(words) + "</p>", f'<img src="{ref}">'),
+        ('<ul><li class="first"><li>' + " ".join(words[:6]) + "<li>"
+         + " ".join(words[6:]) + "</ul>", f'<video src="{ref}"></video>'),
+        (f"<h1>Doc &amp; {sid}</h1><pre>" + "\n".join(words) + "</pre>",
+         f'<object data="{ref}"></object>'),
+    ][i % 3]
+    tail = f'<p class="tail">tail of {sid}</p></div></body></html>'
+    return head + body + media + tail
+
+
+def test_bench_docs_stay_in_c(monkeypatch):
+    """A benchmark-shaped doc is one tree_run call and no Python process()
+    call: the preamble, the body and the postamble all run in C."""
+    from ksoup_spark.kernel import treebuilder
+    from ksoup_spark.kernel.textops import extract_spans
+
+    mod = tree_module()
+    runs = []
+    processed = []
+
+    class Counting:
+        @staticmethod
+        def tree_run(*args):
+            runs.append(1)
+            return mod.tree_run(*args)
+
+    real_process = treebuilder.HtmlTreeBuilder.process
+
+    def process(self, tok):
+        processed.append(tok)
+        return real_process(self, tok)
+
+    monkeypatch.setattr(treebuilder, "tree_module", lambda: Counting)
+    monkeypatch.setattr(treebuilder.HtmlTreeBuilder, "process", process)
+    for i in range(6):
+        page = _bench_page(i)
+        runs.clear()
+        d = parse(page)
+        assert (len(runs), processed) == (1, []), page
+        sid = f"doc-{i:08d}"
+        assert d.base_uri == f"http://corpus.example/{sid}/"
+        media = [s for s in extract_spans(d) if s[0] != "text"]
+        assert [s[2] for s in media] == \
+            [f"http://corpus.example/{sid}/media/{sid}.bin"]
+    monkeypatch.undo()
+    for i in range(6):
+        parse_both(_bench_page(i))
 
 
 def test_tree_parity_base_uri():
@@ -178,6 +306,18 @@ def test_tree_parity_fuzz_soup(soup_pages):
     assert len(soup_pages) >= 300
     for html in soup_pages:
         parse_both(html)
+
+
+def test_tree_parity_fuzz_pages():
+    """Page-shaped fuzz documents (the campaign's ``_page``: doctype, head
+    and body scaffolding around a soup body) at a fixed seed."""
+    import random
+
+    from jobs.fuzz_campaign import _page
+
+    rng = random.Random(20261019)
+    for _ in range(400):
+        parse_both(_page(rng))
 
 
 def test_tree_parity_spans_and_text():

@@ -154,3 +154,22 @@ def test_basic_q_cite_unconstrained_reference_quirk():
     got2 = clean_html("<blockquote cite='ftp://w/x'>t</blockquote>",
                       Safelist.basic())
     assert "cite" not in got2.replace("blockquote", "bq")
+
+
+def test_deep_chain_serializes_and_cleans():
+    """A 50,000-deep <div> chain: serialization and cleaning walk the tree
+    with explicit stacks, so depth is no RecursionError."""
+    from ksoup_spark.kernel.serialize import outer_html
+    from ksoup_spark.kernel.treebuilder import parse
+
+    depth = 50_000
+    html = "<div>" * depth + "x" + "</div>" * depth
+    out = outer_html(parse(html), pretty=False)
+    assert out.count("<div>") == depth and out.count("</div>") == depth
+    assert "<div>x</div>" in out
+    keep_divs = Safelist.basic().add_tags("div")
+    cleaned = clean_html(html, keep_divs)
+    assert cleaned.count("<div>") == depth and cleaned.count("</div>") == depth
+    assert is_valid_html(html, keep_divs)
+    assert clean_html(html) == "x"
+    assert not is_valid_html(html)

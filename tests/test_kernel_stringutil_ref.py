@@ -69,3 +69,97 @@ def test_abs_url_absolute_value_without_base():
     d = parse('<a href="https://example.com/one">x</a>')
     a = select_first(d, "a")
     assert d.abs_url(a, "href") == "https://example.com/one"
+
+
+# ---------------------------------------------------------------------------
+# resolve_url's plain-join fast path vs the urljoin merge it skips
+# ---------------------------------------------------------------------------
+
+import re  # noqa: E402
+from urllib.parse import urljoin  # noqa: E402
+
+from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+from ksoup_spark.kernel import dom  # noqa: E402
+
+
+def _urljoin_resolve(base, rel):
+    """resolve_url as it reads without the fast path: every merge through
+    urljoin."""
+    ctl = re.compile(r"[\x00-\x1f]+")
+    base = ctl.sub("", base) if base else ""
+    rel = ctl.sub("", rel) if rel else ""
+    if not rel:
+        return base
+    if len(rel) > 2 and ":" in rel:
+        return rel
+    if not (len(base) > 2 and ":" in base):
+        return ""
+    try:
+        return urljoin(base, rel)
+    except ValueError:
+        return ""
+
+
+_SCHEMES = st.sampled_from(["http://", "https://", "HTTP://", "Https://",
+                            "ftp://", "file://", "mailto:", "http:/",
+                            "http:", "data:", "x-y://", " http://", ""])
+_HOSTS = st.sampled_from(["corpus.example", "a.b", "h:8080", "h:", "u@h",
+                          "[::1]", "[::1]:80", "[::1", "::1]", "é.example",
+                          "ex\\am", "h h", "", ".", "h?q", "h#f", "h;p"])
+_SEGS = st.sampled_from(["a", "doc-1", "media", "b c", "%20", "x.bin", ".",
+                         "..", "", ".g", "g.", "..g", ";p", "a;b", "?q", "#f",
+                         "a?b", "b#c", "\\", "a\\b", ":", "a:b", " ", " a",
+                         "a ", "\x01", "\t", "\n", "é", "中", "\x7f", "~"])
+_PATHS = st.lists(_SEGS, max_size=6).map("/".join)
+_LEADS = st.sampled_from(["", "", "", "/", "//", " ", "./", "../", "\x00",
+                          "\\", "?", "#"])
+_TRAILS = st.sampled_from(["", "", "/", " ", "/.", "/..", "?x", "#y", ";z"])
+
+
+@st.composite
+def _bases(draw):
+    return (draw(_SCHEMES) + draw(_HOSTS) + draw(_LEADS)
+            + draw(_PATHS) + draw(_TRAILS))
+
+
+@st.composite
+def _rels(draw):
+    return draw(_LEADS) + draw(_PATHS) + draw(_TRAILS)
+
+
+_FREE = st.text(alphabet=st.sampled_from(list("ab./\\?#;:[]@% é\x00\t")),
+                max_size=24)
+
+
+@settings(max_examples=3000, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(base=st.one_of(_bases(), _FREE), rel=st.one_of(_rels(), _FREE))
+def test_resolve_url_matches_urljoin(base, rel):
+    assert resolve_url(base, rel) == _urljoin_resolve(base, rel)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(base=_bases(), rel=_rels())
+def test_plain_join_is_urljoin_where_taken(base, rel):
+    """Where the fast path answers, its answer is urljoin's (on inputs
+    already stripped of control chars, as resolve_url hands them over)."""
+    base, rel = dom._strip_ctl(base), dom._strip_ctl(rel)
+    joined = dom._plain_join(base, rel)
+    if joined is not None:
+        assert joined == urljoin(base, rel)
+
+
+def test_media_ref_shape_takes_the_fast_path():
+    assert dom._plain_join("http://corpus.example/doc-1/",
+                           "media/doc-1.bin") \
+        == "http://corpus.example/doc-1/media/doc-1.bin"
+    assert dom._plain_join("https://h/a/b", "c d/e.png") == "https://h/a/c d/e.png"
+    for base, rel in [("http://h/a/./", "x"), ("http://h/a//b", "x"),
+                      ("http://h", "x"), ("HTTP://h/", "x"),
+                      ("http://[::1]/", "x"), ("http://h/?q", "x"),
+                      ("http://h/", "./x"), ("http://h/", "a/../x"),
+                      ("http://h/", "a//x"), ("http://h/", " x"),
+                      ("http://h/", "x;p"), ("http://h/", "x\\y")]:
+        assert dom._plain_join(base, rel) is None, (base, rel)
