@@ -8,7 +8,8 @@ territory:
 
 1. C-vs-Python whole-tree parity over random adversarial tag soup
    (node lists + errors + quirks + form links must be identical), plus
-   span/text extraction equality — the generator mixes every branch the C
+   span/text extraction equality (the spans at the default root and every
+   element's text) — the generator mixes every branch the C
    engine handles with the ones it bails on (doctype/comments/CDATA/
    rawtext/foreign content/entities included) — and over page-shaped
    documents: doctype, head and body scaffolding around a soup body
@@ -136,24 +137,37 @@ def _table(d):
 
 
 def run_tree_parity(seed: int, n: int, gen=_soup) -> dict:
+    """C engines vs their Python references on n generated documents: the
+    node table (C tree engine vs process()), then over that tree the spans
+    at the default root and every element's text (C walk vs _walk_py)."""
+    from unittest import mock
+
+    from ksoup_spark.kernel import dom, treebuilder
     from ksoup_spark.kernel.ctokenizer import tree_module
+    from ksoup_spark.kernel.textops import (
+        _element_text_py, _extract_spans_py, element_text, extract_spans)
     if tree_module() is None:
         return {"skipped": "C tree engine unavailable", "n": 0, "bad": 0}
     rng = random.Random(seed)
     bad = []
-    assert "KSOUP_SPARK_NO_CTREE" not in os.environ
     for i in range(n):
         html = gen(rng)
         d1 = parse(html)
-        os.environ["KSOUP_SPARK_NO_CTREE"] = "1"
-        try:
+        # KSOUP_SPARK_NO_CTREE is read once per process: switch the engine
+        # off by patching its lookup instead
+        with mock.patch.object(treebuilder, "tree_module", lambda: None):
             d2 = parse(html)
-        finally:
-            del os.environ["KSOUP_SPARK_NO_CTREE"]
         if _table(d1) != _table(d2):
-            bad.append(html[:300])
-            if len(bad) >= 5:
-                break
+            bad.append(("tree", html[:300]))
+        else:
+            root = next((r for r in (d2.body(), d2.html_el()) if r != -1), 0)
+            if extract_spans(d1) != _extract_spans_py(d2, root) or any(
+                    element_text(d1, e) != _element_text_py(d2, e)
+                    for e in range(len(d2.kind))
+                    if d2.kind[e] == dom.ELEMENT):
+                bad.append(("text", html[:300]))
+        if len(bad) >= 5:
+            break
     return {"n": i + 1, "bad": len(bad), "samples": bad}
 
 

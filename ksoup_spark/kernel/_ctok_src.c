@@ -1181,159 +1181,12 @@ static PyObject *py_tokenize(PyObject *self, PyObject *args) {
     return res;
 }
 
-/* ---- whitespace normalization (StringUtil.appendNormalisedWhitespace) ---
+/* ---- text accumulator and whitespace normalization ----------------------
  *
- * norm_ws(s, strip_leading) mirrors textops.append_normalised exactly:
- * drop U+200B / U+00AD, collapse runs of [ \t\n\f\r ] to one ' ',
- * and when strip_leading is true suppress the single space a leading run
- * would produce (internal/StringUtil.kt:137-191 semantics). Operates on
- * the UTF-8 view (U+00A0 = C2 A0, U+00AD = C2 AD, U+200B = E2 80 8B; every
- * other byte copies verbatim), with a scan-only fast path returning the
- * input object untouched when nothing would change. */
-static PyObject *py_norm_ws(PyObject *self, PyObject *args) {
-    PyObject *str;
-    int strip_leading;
-    if (!PyArg_ParseTuple(args, "Oi", &str, &strip_leading)) return NULL;
-    Py_ssize_t n;
-    const char *s = PyUnicode_AsUTF8AndSize(str, &n);
-    if (!s) return NULL;
-
-    int dirty = 0, prev_sp = 0;
-    Py_ssize_t i;
-    for (i = 0; i < n; i++) {
-        unsigned char c = (unsigned char)s[i];
-        if (c == ' ') {
-            if (prev_sp || (i == 0 && strip_leading)) { dirty = 1; break; }
-            prev_sp = 1;
-        } else if (c == '\t' || c == '\n' || c == '\f' || c == '\r') {
-            dirty = 1; break;
-        } else if (c == 0xC2 && i + 1 < n &&
-                   ((unsigned char)s[i + 1] == 0xA0 ||
-                    (unsigned char)s[i + 1] == 0xAD)) {
-            dirty = 1; break;
-        } else if (c == 0xE2 && i + 2 < n &&
-                   (unsigned char)s[i + 1] == 0x80 &&
-                   (unsigned char)s[i + 2] == 0x8B) {
-            dirty = 1; break;
-        } else {
-            prev_sp = 0;
-        }
-    }
-    if (!dirty) {
-        Py_INCREF(str);
-        return str;
-    }
-
-    char *buf = (char *)PyMem_Malloc((size_t)(n ? n : 1));
-    if (!buf) return PyErr_NoMemory();
-    Py_ssize_t o = 0;
-    int pending = 0;
-    i = 0;
-    while (i < n) {
-        unsigned char c = (unsigned char)s[i];
-        if (c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r') {
-            pending = 1; i++; continue;
-        }
-        if (c == 0xC2 && i + 1 < n) {
-            unsigned char d = (unsigned char)s[i + 1];
-            if (d == 0xA0) { pending = 1; i += 2; continue; }
-            if (d == 0xAD) { i += 2; continue; } /* invisible: drop */
-        } else if (c == 0xE2 && i + 2 < n &&
-                   (unsigned char)s[i + 1] == 0x80 &&
-                   (unsigned char)s[i + 2] == 0x8B) {
-            i += 3; continue; /* invisible: drop */
-        }
-        if (pending) {
-            if (o > 0 || !strip_leading) buf[o++] = ' ';
-            pending = 0;
-        }
-        buf[o++] = (char)c;
-        i++;
-    }
-    if (pending && (o > 0 || !strip_leading)) buf[o++] = ' ';
-    PyObject *res = PyUnicode_DecodeUTF8(buf, o, NULL);
-    PyMem_Free(buf);
-    return res;
-}
-
-static PyObject *py_set_interns(PyObject *self, PyObject *arg) {
-    if (!PyList_Check(arg)) {
-        PyErr_SetString(PyExc_TypeError, "expected list of str");
-        return NULL;
-    }
-    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(arg); i++) {
-        PyObject *o = PyList_GET_ITEM(arg, i);
-        Py_ssize_t l;
-        const char *k = PyUnicode_AsUTF8AndSize(o, &l);
-        if (!k) return NULL;
-        if (l == 0 || l > 32) continue;
-        unsigned h = hash_bytes(k, l) & (ITAB - 1);
-        unsigned h0 = h;
-        while (itab_key[h]) {
-            if (itab_len[h] == l && memcmp(itab_key[h], k, (size_t)l) == 0)
-                goto next; /* already present */
-            h = (h + 1) & (ITAB - 1);
-            if (h == h0) goto next; /* table full: skip */
-        }
-        Py_INCREF(o);
-        itab_obj[h] = o;
-        itab_key[h] = k;
-        itab_len[h] = l;
-    next:;
-    }
-    Py_RETURN_NONE;
-}
-
-
-/* ---- span extraction (Element.text() + media interleave) ----------------
- *
- * C mirror of textops.extract_spans (Element.kt:1312-1351 text assembly +
- * the graft's media segmentation): one DFS over the Doc's parallel lists
- * (kind, tag, text, children) applying the normalization / block-boundary
- * rules, flushing the accumulator at img/video/object elements. Media spans
- * come back with the NODE ID in the media_ref slot; the Python wrapper
- * resolves refs (absUrl + <video><source> fallback) — media spans are rare,
- * the URL join is pure Python semantics (urljoin), and this keeps the C
- * side free of any URL logic. Raises (and the wrapper falls back to the
- * pure-Python path) on lone-surrogate text that can't view as UTF-8. */
-
-#define TF_BLOCK 1
-#define TF_FMT_INLINE 2
-#define TF_PRESERVE 4
-#define TF_MEDIA_IMG 8
-#define TF_MEDIA_VIDEO 16
-#define TF_MEDIA_OBJECT 32
-#define TF_BR 64
-#define TF_MEDIA (TF_MEDIA_IMG | TF_MEDIA_VIDEO | TF_MEDIA_OBJECT)
-
-static PyObject *S_image, *S_video, *S_object;
-
-typedef struct { PyObject *key[256]; int flags[256]; } TagCache;
-
-static int tag_flags_lookup(const char *s) {
-    int lo = 0, hi = N_TAGF - 1;
-    while (lo <= hi) {
-        int mid = (lo + hi) >> 1;
-        int c = strcmp(s, TAGF[mid].name);
-        if (c == 0) return TAGF[mid].flags;
-        if (c < 0) hi = mid - 1; else lo = mid + 1;
-    }
-    return 0;
-}
-
-static int tag_flags(TagCache *tc, PyObject *tagobj) {
-    if (tagobj == Py_None) return 0;
-    unsigned idx = (unsigned)(((uintptr_t)tagobj) >> 4) & 255u;
-    if (tc->key[idx] == tagobj) return tc->flags[idx];
-    Py_ssize_t l;
-    const char *s = PyUnicode_AsUTF8AndSize(tagobj, &l);
-    if (!s) { PyErr_Clear(); return 0; }
-    int f = tag_flags_lookup(s);
-    tc->key[idx] = tagobj;
-    tc->flags[idx] = f;
-    return f;
-}
-
+ * Acc is the UTF-8 byte buffer the text walk below appends to; last_ws
+ * tracks whether it ends in whitespace (the strip_leading of the next
+ * normalized append). Lone-surrogate text can't view as UTF-8: every
+ * caller raises there and the Python wrapper falls back. */
 typedef struct { char *b; Py_ssize_t len, cap; int last_ws; } Acc;
 
 static int acc_reserve(Acc *a, Py_ssize_t extra) {
@@ -1363,8 +1216,13 @@ static int acc_raw(Acc *a, const char *s, Py_ssize_t n) {
     return 0;
 }
 
-/* normalized append: StringUtil.appendNormalisedWhitespace with
- * strip_leading = accumulator-ends-in-whitespace (same loop as norm_ws) */
+/* normalized append: StringUtil.appendNormalisedWhitespace
+ * (internal/StringUtil.kt:137-191) with strip_leading = the accumulator
+ * ends in whitespace: drop U+200B / U+00AD, collapse runs of
+ * [ \t\n\f\r U+00A0] to one ' ', and suppress the single space a leading
+ * run would produce when strip_leading holds. Works on the UTF-8 view
+ * (U+00A0 = C2 A0, U+00AD = C2 AD, U+200B = E2 80 8B; every other byte
+ * copies verbatim). */
 static int acc_norm(Acc *a, const char *s, Py_ssize_t n) {
     if (!n) return 0;
     if (acc_reserve(a, n + 1)) return -1;
@@ -1408,17 +1266,142 @@ static int is_trim(unsigned char c) {
            c == '\v';
 }
 
-/* flush accumulated text as a ("text", s, None, offset) span */
-static int acc_flush(Acc *a, PyObject *out) {
+/* norm_ws(s, strip_leading) mirrors textops.append_normalised exactly: a
+ * scan-only check returns the input object untouched when nothing would
+ * change; otherwise acc_norm rewrites it. */
+static PyObject *py_norm_ws(PyObject *self, PyObject *args) {
+    PyObject *str;
+    int strip_leading;
+    if (!PyArg_ParseTuple(args, "Oi", &str, &strip_leading)) return NULL;
+    Py_ssize_t n;
+    const char *s = PyUnicode_AsUTF8AndSize(str, &n);
+    if (!s) return NULL;
+
+    int dirty = 0, prev_sp = 0;
+    for (Py_ssize_t i = 0; i < n; i++) {
+        unsigned char c = (unsigned char)s[i];
+        if (c == ' ') {
+            if (prev_sp || (i == 0 && strip_leading)) { dirty = 1; break; }
+            prev_sp = 1;
+        } else if (c == '\t' || c == '\n' || c == '\f' || c == '\r') {
+            dirty = 1; break;
+        } else if (c == 0xC2 && i + 1 < n &&
+                   ((unsigned char)s[i + 1] == 0xA0 ||
+                    (unsigned char)s[i + 1] == 0xAD)) {
+            dirty = 1; break;
+        } else if (c == 0xE2 && i + 2 < n &&
+                   (unsigned char)s[i + 1] == 0x80 &&
+                   (unsigned char)s[i + 2] == 0x8B) {
+            dirty = 1; break;
+        } else {
+            prev_sp = 0;
+        }
+    }
+    if (!dirty) {
+        Py_INCREF(str);
+        return str;
+    }
+    Acc a = {NULL, 0, 0, strip_leading};
+    PyObject *res = acc_norm(&a, s, n) ? NULL
+                  : PyUnicode_DecodeUTF8(a.len ? a.b : "", a.len, NULL);
+    PyMem_Free(a.b);
+    return res;
+}
+
+static PyObject *py_set_interns(PyObject *self, PyObject *arg) {
+    if (!PyList_Check(arg)) {
+        PyErr_SetString(PyExc_TypeError, "expected list of str");
+        return NULL;
+    }
+    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(arg); i++) {
+        PyObject *o = PyList_GET_ITEM(arg, i);
+        Py_ssize_t l;
+        const char *k = PyUnicode_AsUTF8AndSize(o, &l);
+        if (!k) return NULL;
+        if (l == 0 || l > 32) continue;
+        unsigned h = hash_bytes(k, l) & (ITAB - 1);
+        unsigned h0 = h;
+        while (itab_key[h]) {
+            if (itab_len[h] == l && memcmp(itab_key[h], k, (size_t)l) == 0)
+                goto next; /* already present */
+            h = (h + 1) & (ITAB - 1);
+            if (h == h0) goto next; /* table full: skip */
+        }
+        Py_INCREF(o);
+        itab_obj[h] = o;
+        itab_key[h] = k;
+        itab_len[h] = l;
+    next:;
+    }
+    Py_RETURN_NONE;
+}
+
+
+/* ---- text walk: Element.text(), optionally segmented at media -----------
+ *
+ * C mirror of textops._walk_py (Element.kt:1312-1351 text assembly plus the
+ * graft's media segmentation): one DFS over the Doc's parallel lists
+ * (kind, tag, text, children) applying the normalization, pre-depth and
+ * block-boundary rules. element_text runs it plain and returns the trimmed
+ * text; extract_spans gives it an output list, and it then flushes the
+ * accumulator at img/video/object elements. Media spans come back with
+ * the NODE ID in the media_ref slot; the Python wrapper resolves refs
+ * (absUrl + <video><source> fallback) — media spans are rare, the URL join
+ * is pure Python semantics (urljoin), and this keeps the C side free of
+ * any URL logic. */
+
+#define TF_BLOCK 1
+#define TF_FMT_INLINE 2
+#define TF_PRESERVE 4
+#define TF_MEDIA_IMG 8
+#define TF_MEDIA_VIDEO 16
+#define TF_MEDIA_OBJECT 32
+#define TF_BR 64
+#define TF_MEDIA (TF_MEDIA_IMG | TF_MEDIA_VIDEO | TF_MEDIA_OBJECT)
+
+static PyObject *S_image, *S_video, *S_object;
+
+typedef struct { PyObject *key[256]; int flags[256]; } TagCache;
+
+static int tag_flags_lookup(const char *s) {
+    int lo = 0, hi = N_TAGF - 1;
+    while (lo <= hi) {
+        int mid = (lo + hi) >> 1;
+        int c = strcmp(s, TAGF[mid].name);
+        if (c == 0) return TAGF[mid].flags;
+        if (c < 0) hi = mid - 1; else lo = mid + 1;
+    }
+    return 0;
+}
+
+static int tag_flags(TagCache *tc, PyObject *tagobj) {
+    if (tagobj == Py_None) return 0;
+    unsigned idx = (unsigned)(((uintptr_t)tagobj) >> 4) & 255u;
+    if (tc->key[idx] == tagobj) return tc->flags[idx];
+    Py_ssize_t l;
+    const char *s = PyUnicode_AsUTF8AndSize(tagobj, &l);
+    if (!s) { PyErr_Clear(); return 0; }
+    int f = tag_flags_lookup(s);
+    tc->key[idx] = tagobj;
+    tc->flags[idx] = f;
+    return f;
+}
+
+/* the accumulated text stripped of " \t\n\r\f\v", as a str; empties acc */
+static PyObject *acc_take(Acc *a) {
     Py_ssize_t s = 0, e = a->len;
-    const char *b = a->b;
-    while (s < e && is_trim((unsigned char)b[s])) s++;
-    while (e > s && is_trim((unsigned char)b[e - 1])) e--;
+    while (s < e && is_trim((unsigned char)a->b[s])) s++;
+    while (e > s && is_trim((unsigned char)a->b[e - 1])) e--;
     a->len = 0;
     a->last_ws = 0;
-    if (e <= s) return 0;
-    PyObject *txt = PyUnicode_DecodeUTF8(b + s, e - s, NULL);
+    return PyUnicode_DecodeUTF8(e > s ? a->b + s : "", e - s, NULL);
+}
+
+/* flush accumulated text as a ("text", s, None, offset) span */
+static int acc_flush(Acc *a, PyObject *out) {
+    PyObject *txt = acc_take(a);
     if (!txt) return -1;
+    if (PyUnicode_GET_LENGTH(txt) == 0) { Py_DECREF(txt); return 0; }
     PyObject *tup = Py_BuildValue("(ONOn)", S_text, txt, Py_None,
                                   PyList_GET_SIZE(out));
     if (!tup) return -1;
@@ -1429,30 +1412,34 @@ static int acc_flush(Acc *a, PyObject *out) {
 
 typedef struct { Py_ssize_t node; Py_ssize_t ci; } Frame;
 
-static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
+/* The walk over args = (kind, tag, text, children, root), appending to
+ * acc. With out == NULL media elements are ordinary elements whose
+ * fallback content contributes; with an output list every img/video/object
+ * below root flushes acc into out, appends its media span and skips its
+ * subtree. Returns 0, or -1 with an exception set. */
+static int text_walk(PyObject *args, Acc *acc, PyObject *out) {
     PyObject *kindL, *tagL, *textL, *chL;
     Py_ssize_t root;
     if (!PyArg_ParseTuple(args, "O!O!O!O!n", &PyList_Type, &kindL,
                           &PyList_Type, &tagL, &PyList_Type, &textL,
                           &PyList_Type, &chL, &root))
-        return NULL;
+        return -1;
     Py_ssize_t nn = PyList_GET_SIZE(kindL);
     if (PyList_GET_SIZE(tagL) < nn || PyList_GET_SIZE(textL) < nn ||
         PyList_GET_SIZE(chL) < nn || root < 0 || root >= nn) {
         PyErr_SetString(PyExc_ValueError, "node table shape mismatch");
-        return NULL;
+        return -1;
     }
 
     TagCache tc;
     memset(&tc, 0, sizeof(tc));
-    Acc acc = {NULL, 0, 0, 0};
+    int rc = -1;
     Py_ssize_t scap = 256, sp = 0;
     Frame *st = (Frame *)PyMem_Malloc(sizeof(Frame) * (size_t)scap);
     Py_ssize_t pcap = 64, npre = 0;
     Py_ssize_t *pre = (Py_ssize_t *)PyMem_Malloc(sizeof(Py_ssize_t) *
                                                  (size_t)pcap);
-    PyObject *out = PyList_New(0);
-    if (!st || !pre || !out) goto fail;
+    if (!st || !pre) { PyErr_NoMemory(); goto done; }
 
     st[0].node = root; st[0].ci = 0; sp = 1;
 
@@ -1463,7 +1450,7 @@ static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
         PyObject *kids = PyList_GET_ITEM(chL, node);
         if (!PyList_Check(kids)) {
             PyErr_SetString(PyExc_TypeError, "children not a list");
-            goto fail;
+            goto done;
         }
         if (ci == 0) { /* head */
             long k = PyLong_AsLong(PyList_GET_ITEM(kindL, node));
@@ -1472,12 +1459,12 @@ static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
                 if (t != Py_None) {
                     Py_ssize_t tn;
                     const char *ts = PyUnicode_AsUTF8AndSize(t, &tn);
-                    if (!ts) goto fail; /* lone surrogates: wrapper falls back */
+                    if (!ts) goto done;
                     /* inside pre (≤6 levels up): raw, else normalized */
                     if (npre > 0 && (sp - 2) - pre[npre - 1] < 6) {
-                        if (acc_raw(&acc, ts, tn)) goto fail;
+                        if (acc_raw(acc, ts, tn)) goto done;
                     } else {
-                        if (acc_norm(&acc, ts, tn)) goto fail;
+                        if (acc_norm(acc, ts, tn)) goto done;
                     }
                 }
             } else if (k == 5) { /* CDATA: raw */
@@ -1485,36 +1472,35 @@ static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
                 if (t != Py_None) {
                     Py_ssize_t tn;
                     const char *ts = PyUnicode_AsUTF8AndSize(t, &tn);
-                    if (!ts) goto fail;
-                    if (acc_raw(&acc, ts, tn)) goto fail;
+                    if (!ts) goto done;
+                    if (acc_raw(acc, ts, tn)) goto done;
                 }
             } else if (k == 1) { /* ELEMENT */
                 int f = tag_flags(&tc, PyList_GET_ITEM(tagL, node));
-                if ((f & TF_MEDIA) && node != root) {
-                    /* flush text, emit media span carrying the node id;
-                     * the whole subtree (fallback content) is skipped —
-                     * equivalent to the Python path's skip_under latch */
-                    if (acc_flush(&acc, out)) goto fail;
+                if (out && (f & TF_MEDIA) && node != root) {
+                    /* flush text, emit the media span, skip the subtree */
+                    if (acc_flush(acc, out)) goto done;
                     PyObject *mk = (f & TF_MEDIA_IMG) ? S_image
                                  : (f & TF_MEDIA_VIDEO) ? S_video : S_object;
                     PyObject *tup = Py_BuildValue(
                         "(OOnn)", mk, Py_None, node, PyList_GET_SIZE(out));
-                    if (!tup) goto fail;
+                    if (!tup) goto done;
                     int r = PyList_Append(out, tup);
                     Py_DECREF(tup);
-                    if (r) goto fail;
+                    if (r) goto done;
                     sp--;
                     continue;
                 }
-                if (acc.len > 0 && (f & (TF_BLOCK | TF_BR)) && !acc.last_ws) {
-                    if (acc_raw(&acc, " ", 1)) goto fail;
+                if (acc->len > 0 && (f & (TF_BLOCK | TF_BR)) &&
+                    !acc->last_ws) {
+                    if (acc_raw(acc, " ", 1)) goto done;
                 }
                 if (f & TF_PRESERVE) {
                     if (npre >= pcap) {
                         pcap *= 2;
                         Py_ssize_t *np = (Py_ssize_t *)PyMem_Realloc(
                             pre, sizeof(Py_ssize_t) * (size_t)pcap);
-                        if (!np) { PyErr_NoMemory(); goto fail; }
+                        if (!np) { PyErr_NoMemory(); goto done; }
                         pre = np;
                     }
                     pre[npre++] = sp - 1;
@@ -1526,15 +1512,16 @@ static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
             fr->ci = ci + 1;
             long child = PyLong_AsLong(PyList_GET_ITEM(kids, ci));
             if (child < 0 || child >= nn) {
-                if (PyErr_Occurred()) goto fail;
-                PyErr_SetString(PyExc_ValueError, "child id out of range");
-                goto fail;
+                if (!PyErr_Occurred())
+                    PyErr_SetString(PyExc_ValueError,
+                                    "child id out of range");
+                goto done;
             }
             if (sp >= scap) {
                 scap *= 2;
                 Frame *ns = (Frame *)PyMem_Realloc(
                     st, sizeof(Frame) * (size_t)scap);
-                if (!ns) { PyErr_NoMemory(); goto fail; }
+                if (!ns) { PyErr_NoMemory(); goto done; }
                 st = ns;
             }
             st[sp].node = child; st[sp].ci = 0; sp++;
@@ -1546,7 +1533,7 @@ static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
         if (k == 1) {
             if (npre > 0 && pre[npre - 1] == sp) npre--;
             int f = tag_flags(&tc, PyList_GET_ITEM(tagL, node));
-            if ((f & TF_BLOCK) && sp > 0 && !acc.last_ws) {
+            if ((f & TF_BLOCK) && sp > 0 && !acc->last_ws) {
                 /* space after a block element when the next sibling is text
                  * or a non-format-as-block element (Element.kt:1339-1349) */
                 Frame *pf = &st[sp - 1];
@@ -1564,169 +1551,35 @@ static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
                             space = !((nf & TF_BLOCK) &&
                                       !(nf & TF_FMT_INLINE));
                         }
-                        if (space && acc_raw(&acc, " ", 1)) goto fail;
+                        if (space && acc_raw(acc, " ", 1)) goto done;
                     }
                 }
             }
         }
     }
-    if (acc_flush(&acc, out)) goto fail;
+    rc = 0;
+done:
     PyMem_Free(st);
     PyMem_Free(pre);
-    PyMem_Free(acc.b);
-    return out;
-
-fail:
-    PyMem_Free(st);
-    PyMem_Free(pre);
-    PyMem_Free(acc.b);
-    Py_XDECREF(out);
-    return NULL;
+    return rc;
 }
 
-
-/* ---- element_text: Element.text() over a subtree ------------------------
- * Same DFS as py_extract_spans with no media segmentation (media elements
- * are ordinary elements whose fallback content contributes, matching
- * textops.element_text); returns the normalized text stripped of
- * " \t\n\r\f\v". */
-static PyObject *py_element_text(PyObject *self, PyObject *args) {
-    PyObject *kindL, *tagL, *textL, *chL;
-    Py_ssize_t root;
-    if (!PyArg_ParseTuple(args, "O!O!O!O!n", &PyList_Type, &kindL,
-                          &PyList_Type, &tagL, &PyList_Type, &textL,
-                          &PyList_Type, &chL, &root))
-        return NULL;
-    Py_ssize_t nn = PyList_GET_SIZE(kindL);
-    if (PyList_GET_SIZE(tagL) < nn || PyList_GET_SIZE(textL) < nn ||
-        PyList_GET_SIZE(chL) < nn || root < 0 || root >= nn) {
-        PyErr_SetString(PyExc_ValueError, "node table shape mismatch");
-        return NULL;
-    }
-
-    TagCache tc;
-    memset(&tc, 0, sizeof(tc));
+static PyObject *py_extract_spans(PyObject *self, PyObject *args) {
     Acc acc = {NULL, 0, 0, 0};
-    Py_ssize_t scap = 256, sp = 0;
-    Frame *st = (Frame *)PyMem_Malloc(sizeof(Frame) * (size_t)scap);
-    Py_ssize_t pcap = 64, npre = 0;
-    Py_ssize_t *pre = (Py_ssize_t *)PyMem_Malloc(sizeof(Py_ssize_t) *
-                                                 (size_t)pcap);
-    if (!st || !pre) goto fail;
-
-    st[0].node = root; st[0].ci = 0; sp = 1;
-
-    while (sp > 0) {
-        Frame *fr = &st[sp - 1];
-        Py_ssize_t node = fr->node;
-        Py_ssize_t ci = fr->ci;
-        PyObject *kids = PyList_GET_ITEM(chL, node);
-        if (!PyList_Check(kids)) {
-            PyErr_SetString(PyExc_TypeError, "children not a list");
-            goto fail;
-        }
-        if (ci == 0) { /* head */
-            long k = PyLong_AsLong(PyList_GET_ITEM(kindL, node));
-            if (k == 2) { /* TEXT */
-                PyObject *t = PyList_GET_ITEM(textL, node);
-                if (t != Py_None) {
-                    Py_ssize_t tn;
-                    const char *ts = PyUnicode_AsUTF8AndSize(t, &tn);
-                    if (!ts) goto fail;
-                    if (npre > 0 && (sp - 2) - pre[npre - 1] < 6) {
-                        if (acc_raw(&acc, ts, tn)) goto fail;
-                    } else {
-                        if (acc_norm(&acc, ts, tn)) goto fail;
-                    }
-                }
-            } else if (k == 5) { /* CDATA: raw */
-                PyObject *t = PyList_GET_ITEM(textL, node);
-                if (t != Py_None) {
-                    Py_ssize_t tn;
-                    const char *ts = PyUnicode_AsUTF8AndSize(t, &tn);
-                    if (!ts) goto fail;
-                    if (acc_raw(&acc, ts, tn)) goto fail;
-                }
-            } else if (k == 1) { /* ELEMENT */
-                int f = tag_flags(&tc, PyList_GET_ITEM(tagL, node));
-                if (acc.len > 0 && (f & (TF_BLOCK | TF_BR)) && !acc.last_ws) {
-                    if (acc_raw(&acc, " ", 1)) goto fail;
-                }
-                if (f & TF_PRESERVE) {
-                    if (npre >= pcap) {
-                        pcap *= 2;
-                        Py_ssize_t *np = (Py_ssize_t *)PyMem_Realloc(
-                            pre, sizeof(Py_ssize_t) * (size_t)pcap);
-                        if (!np) { PyErr_NoMemory(); goto fail; }
-                        pre = np;
-                    }
-                    pre[npre++] = sp - 1;
-                }
-            }
-        }
-        if (ci < PyList_GET_SIZE(kids)) {
-            fr->ci = ci + 1;
-            long child = PyLong_AsLong(PyList_GET_ITEM(kids, ci));
-            if (child < 0 || child >= nn) {
-                if (PyErr_Occurred()) goto fail;
-                PyErr_SetString(PyExc_ValueError, "child id out of range");
-                goto fail;
-            }
-            if (sp >= scap) {
-                scap *= 2;
-                Frame *ns = (Frame *)PyMem_Realloc(
-                    st, sizeof(Frame) * (size_t)scap);
-                if (!ns) { PyErr_NoMemory(); goto fail; }
-                st = ns;
-            }
-            st[sp].node = child; st[sp].ci = 0; sp++;
-            continue;
-        }
-        /* tail */
-        sp--;
-        long k = PyLong_AsLong(PyList_GET_ITEM(kindL, node));
-        if (k == 1) {
-            if (npre > 0 && pre[npre - 1] == sp) npre--;
-            int f = tag_flags(&tc, PyList_GET_ITEM(tagL, node));
-            if ((f & TF_BLOCK) && sp > 0 && !acc.last_ws) {
-                Frame *pf = &st[sp - 1];
-                PyObject *pkids = PyList_GET_ITEM(chL, pf->node);
-                if (pf->ci < PyList_GET_SIZE(pkids)) {
-                    long nxt = PyLong_AsLong(
-                        PyList_GET_ITEM(pkids, pf->ci));
-                    if (nxt >= 0 && nxt < nn) {
-                        long nk = PyLong_AsLong(
-                            PyList_GET_ITEM(kindL, nxt));
-                        int space = (nk == 2 || nk == 5);
-                        if (!space && nk == 1) {
-                            int nf = tag_flags(
-                                &tc, PyList_GET_ITEM(tagL, nxt));
-                            space = !((nf & TF_BLOCK) &&
-                                      !(nf & TF_FMT_INLINE));
-                        }
-                        if (space && acc_raw(&acc, " ", 1)) goto fail;
-                    }
-                }
-            }
-        }
-    }
-    {
-        Py_ssize_t b = 0, e = acc.len;
-        const char *buf = acc.b;
-        while (b < e && is_trim((unsigned char)buf[b])) b++;
-        while (e > b && is_trim((unsigned char)buf[e - 1])) e--;
-        PyObject *res = PyUnicode_DecodeUTF8(buf ? buf + b : "", e - b, NULL);
-        PyMem_Free(st);
-        PyMem_Free(pre);
-        PyMem_Free(acc.b);
-        return res;
-    }
-
-fail:
-    PyMem_Free(st);
-    PyMem_Free(pre);
+    PyObject *out = PyList_New(0);
+    if (out && (text_walk(args, &acc, out) || acc_flush(&acc, out)))
+        Py_CLEAR(out);
     PyMem_Free(acc.b);
-    return NULL;
+    return out;
+}
+
+/* Element.text() over a subtree: the walk's text, stripped of
+ * " \t\n\r\f\v" */
+static PyObject *py_element_text(PyObject *self, PyObject *args) {
+    Acc acc = {NULL, 0, 0, 0};
+    PyObject *res = text_walk(args, &acc, NULL) ? NULL : acc_take(&acc);
+    PyMem_Free(acc.b);
+    return res;
 }
 
 

@@ -289,53 +289,36 @@ class CTokenizer:
             return toks[0]
         return _EOF
 
-    def next_batch(self):
-        """(tokens, done) — the bulk interface the tree builder's parse loop
-        iterates directly, skipping one Python call per token. A batch ends
-        at EOF, the size cap, or right after a state-switch-candidate start
-        tag (always batch-final, so the caller processes every token before
-        the next batch is cut with the possibly-updated state)."""
-        if self._i < len(self._toks):  # mixed next_token/next_batch use
-            toks = self._toks[self._i:]
-            self._i = len(self._toks)
-            return toks, self._done
-        if self._done:
-            return [_EOF], True
-        toks, bp, done = _c.tokenize(self.s, self._bp, self.state,
-                                     self.rawtext_tag, _BATCH)
-        self._bp = bp
-        self._done = done
-        self.state = DATA
-        self._toks = toks
-        self._i = len(toks)
-        return toks, done
 
-
-_tree_ready = False
+_tree = None  # the C module with the tree engine initialized, or None
+_tree_tried = False
 
 
 def tree_module():
     """The C module with the tree-construction engine initialized, or None.
 
-    Lazily passes the Python insertion-mode constants to C (they're the
-    shared vocabulary between tree_run's C-handled subset and the Python
-    handlers it bails to). KSOUP_SPARK_NO_CTREE=1 disables just the tree
-    engine (the C tokenizer stays on)."""
-    global _tree_ready
+    Resolved once per process, like _load(): passes the Python
+    insertion-mode constants to C (they're the shared vocabulary between
+    tree_run's C-handled subset and the Python handlers it bails to).
+    KSOUP_SPARK_NO_CTREE=1 disables just the tree engine (the C tokenizer
+    stays on); it is read at the first call."""
+    global _tree, _tree_tried
+    if _tree_tried:
+        return _tree
+    _tree_tried = True
     if os.environ.get("KSOUP_SPARK_NO_CTREE") == "1":
         return None
     mod = _load()
     if mod is None or not hasattr(mod, "tree_run"):
         return None
-    if not _tree_ready:
-        from . import treebuilder as tb
+    from . import treebuilder as tb
 
-        mod.set_tree_modes(tb.IN_BODY, tb.IN_CELL, tb.IN_CAPTION, tb.TEXT,
-                           tb.IN_TABLE, tb.IN_TABLE_BODY, tb.IN_ROW,
-                           tb.IN_TABLE_TEXT, tb.INITIAL, tb.BEFORE_HTML,
-                           tb.BEFORE_HEAD, tb.IN_HEAD, tb.AFTER_HEAD,
-                           tb.AFTER_BODY, tb.AFTER_AFTER_BODY)
-        _tree_ready = True
+    mod.set_tree_modes(tb.IN_BODY, tb.IN_CELL, tb.IN_CAPTION, tb.TEXT,
+                       tb.IN_TABLE, tb.IN_TABLE_BODY, tb.IN_ROW,
+                       tb.IN_TABLE_TEXT, tb.INITIAL, tb.BEFORE_HTML,
+                       tb.BEFORE_HEAD, tb.IN_HEAD, tb.AFTER_HEAD,
+                       tb.AFTER_BODY, tb.AFTER_AFTER_BODY)
+    _tree = mod
     return mod
 
 

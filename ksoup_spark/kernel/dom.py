@@ -315,32 +315,38 @@ class Doc:
             text_columns = ("text",) + tuple(
                 k for k in text_columns if k != "text")
         kind = self.kind
-        children = self.children
-        # the C integer-column builder; the Python construction below stays
-        # the semantics reference and the fallback
+        # the C integer-column builder; _table_ints stays the semantics
+        # reference and the fallback
         ctab = ctokenizer.c_function("to_table_ints")
-        if ctab is not None:
-            (order, depth_of, par_col, sib, esib, first, nxt,
-             send) = ctab(kind, self.parent, children)
-            out = {
-                "node_id": list(range(len(order))),
-                "parent_id": par_col,
-                "depth": depth_of,
-                "kind": [kind[o] for o in order],
-                "tag": [self.tag[o] for o in order],
-                "ns": [self.ns[o] for o in order],
-                "sibling_index": sib,
-                "elem_sibling_index": esib,
-                "first_child": first,
-                "next_sibling": nxt,
-                "subtree_end": send,
-                "text": [self.text[o] for o in order],
-                "attrs": [self.attrs[o] for o in order],
-            }
-            self._append_text_columns(out, order, text_columns)
-            if include_pseudo:
-                self._append_pseudo_column(out, order)
-            return out
+        (order, depth_of, par_col, sib, esib, first, nxt, send) = (
+            ctab(kind, self.parent, self.children) if ctab is not None
+            else self._table_ints())
+        out = {
+            "node_id": list(range(len(order))),
+            "parent_id": par_col,
+            "depth": depth_of,
+            "kind": [kind[o] for o in order],
+            "tag": [self.tag[o] for o in order],
+            "ns": [self.ns[o] for o in order],
+            "sibling_index": sib,
+            "elem_sibling_index": esib,
+            "first_child": first,
+            "next_sibling": nxt,
+            "subtree_end": send,
+            "text": [self.text[o] for o in order],
+            "attrs": [self.attrs[o] for o in order],
+        }
+        self._append_text_columns(out, order, text_columns)
+        if include_pseudo:
+            self._append_pseudo_column(out, order)
+        return out
+
+    def _table_ints(self) -> tuple[list[int], ...]:
+        """to_table's eight integer columns: preorder node order, depth,
+        parent_id, sibling_index, elem_sibling_index, first_child,
+        next_sibling, subtree_end (the C to_table_ints' results)."""
+        kind = self.kind
+        children = self.children
         # inline preorder walk (generator + tuple per node is the hot cost)
         order: list[int] = []
         depth_of: list[int] = []
@@ -362,26 +368,12 @@ class Doc:
         for new_id, old in enumerate(order):
             remap[old] = new_id
         parent = self.parent
-        out = {
-            "node_id": list(range(n_nodes)),
-            "parent_id": [remap[parent[o]] if parent[o] != -1 else -1
-                          for o in order],
-            "depth": depth_of,
-            "kind": [kind[o] for o in order],
-            "tag": [self.tag[o] for o in order],
-            "ns": [self.ns[o] for o in order],
-            "sibling_index": [0] * n_nodes,
-            "elem_sibling_index": [-1] * n_nodes,
-            "first_child": [-1] * n_nodes,
-            "next_sibling": [-1] * n_nodes,
-            "subtree_end": [0] * n_nodes,
-            "text": [self.text[o] for o in order],
-            "attrs": [self.attrs[o] for o in order],
-        }
-        sib = out["sibling_index"]
-        esib = out["elem_sibling_index"]
-        first = out["first_child"]
-        nxt = out["next_sibling"]
+        par_col = [remap[parent[o]] if parent[o] != -1 else -1
+                   for o in order]
+        sib = [0] * n_nodes
+        esib = [-1] * n_nodes
+        first = [-1] * n_nodes
+        nxt = [-1] * n_nodes
         for new_id, old in enumerate(order):
             kids = children[old]
             if not kids:
@@ -399,7 +391,7 @@ class Doc:
                     esib[rc] = elem_i
                     elem_i += 1
         # subtree_end: last preorder id in the subtree (inclusive interval)
-        send = out["subtree_end"]
+        send = [0] * n_nodes
         dstack: list[int] = []
         for new_id in range(n_nodes):
             d = depth_of[new_id]
@@ -408,10 +400,7 @@ class Doc:
             dstack.append(new_id)
         while dstack:
             send[dstack.pop()] = n_nodes - 1
-        self._append_text_columns(out, order, text_columns)
-        if include_pseudo:
-            self._append_pseudo_column(out, order)
-        return out
+        return order, depth_of, par_col, sib, esib, first, nxt, send
 
     def _append_pseudo_column(self, out: dict, order: list) -> None:
         ps = self.pseudo or ()

@@ -1,12 +1,11 @@
 """Text extraction and span emission.
 
-Reimplements the reference's text assembly semantics:
+Reimplements the reference's (ksoup) text assembly semantics:
 
 - ``text()``: preorder traversal appending normalized text; a space is
   inserted at a block/``br`` head boundary when the accumulator is non-empty
   and doesn't end in whitespace, and after a block element followed by a text
-  node or non-format-as-block element
-  (/root/reference/ksoup/src/com/fleeksoft/ksoup/nodes/Element.kt:1312-1351).
+  node or non-format-as-block element (Element.kt:1312-1351).
 - whitespace collapse treats U+00A0 (nbsp) as whitespace and drops U+200B /
   U+00AD (internal/StringUtil.kt:137-191); text inside ``pre``-like elements
   (checked ≤6 ancestor levels up, Element.kt:1885-1898) and CDATA is appended
@@ -15,10 +14,14 @@ Reimplements the reference's text assembly semantics:
   (Element.kt:1860-1868).
 - ``ownText()``: direct children only, ``br`` -> space (Element.kt:1389-1404).
 
-The span emitter is the graft's flagship operator: a single DFS that applies
-the ``text()`` rules while segmenting at media elements (img/video/object),
-emitting the ordered (kind, text, media_ref, offset) sequence with media refs
-resolved against the document base URI (absUrl semantics, Node.kt:234-244).
+One walk, ``_walk_py``, applies the ``text()`` rules for both
+``element_text`` and the span emitter, the graft's flagship operator. Its
+media switch makes it segment at media elements (img/video/object),
+emitting the ordered (kind, text, media_ref, offset) sequence with media
+refs resolved against the document base URI (absUrl semantics,
+Node.kt:234-244). The C walk (``text_walk`` in _ctok_src.c) mirrors it with
+the same switch; the Python walk stays the semantics reference and the
+fallback.
 """
 
 from __future__ import annotations
@@ -31,7 +34,6 @@ from .dom import Doc
 from .tags import BLOCK_TAGS, PRESERVE_WS_TAGS, format_as_block
 
 _ACTUAL_WS = frozenset(" \t\n\f\r ")
-_INVISIBLE = frozenset("​­")
 _TRIM = " \t\n\r\f\v"
 # regex forms of the isActuallyWhitespace (incl. nbsp) / isInvisibleChar sets
 _WS_RUN = re.compile("[ \t\n\f\r\u00a0]+")
@@ -43,6 +45,7 @@ _INVIS_RE = re.compile("[\u200b\u00ad]")
 # take the UTF-8 C path)
 _cnorm = c_function("norm_ws")
 _ctext = c_function("element_text")
+_cspans = c_function("extract_spans")
 
 
 MEDIA_KIND = {"img": "image", "video": "video", "object": "object"}
@@ -59,6 +62,18 @@ def _media_ref(doc: Doc, node: int, key: str) -> str:
     return doc.get_attr(node, key) or ""
 
 
+def _span_ref(doc: Doc, node: int, tag: str) -> str:
+    """A media span's ref: the tag's ref attribute, or for a ``video``
+    without one, its first ``<source src>`` child that has one."""
+    ref = _media_ref(doc, node, _MEDIA_REF_ATTR[tag])
+    if not ref and tag == "video":
+        for c in doc.children[node]:
+            if doc.kind[c] == dom.ELEMENT and doc.tag[c] == "source":
+                ref = _media_ref(doc, c, "src")
+                if ref:
+                    break
+    return ref
+
 
 def normalise_whitespace(s: str) -> str:
     out: list[str] = []
@@ -73,15 +88,18 @@ def append_normalised(accum: list[str], s: str, strip_leading: bool) -> None:
     actually-whitespace runs to single spaces, strip one leading space when
     the accumulator already ends in whitespace.
     """
-    if _cnorm is not None:
-        try:
-            s = _cnorm(s, strip_leading)
-        except UnicodeEncodeError:  # lone surrogates: regex path
-            s = _norm_ws_py(s, strip_leading)
-    else:
-        s = _norm_ws_py(s, strip_leading)
+    s = _norm(s, strip_leading)
     if s:
         accum.append(s)
+
+
+def _norm(s: str, strip_leading: bool) -> str:
+    if _cnorm is not None:
+        try:
+            return _cnorm(s, strip_leading)
+        except UnicodeEncodeError:  # lone surrogates: regex path
+            pass
+    return _norm_ws_py(s, strip_leading)
 
 
 def _norm_ws_py(s: str, strip_leading: bool) -> str:
@@ -102,11 +120,8 @@ class _Accum:
         self.parts: list[str] = []
         self.last_char = ""
 
-    def is_empty(self) -> bool:
-        return not self.parts
-
     def last_is_ws(self) -> bool:
-        return self.last_char == " " or self.last_char in _ACTUAL_WS
+        return self.last_char in _ACTUAL_WS
 
     def append(self, s: str) -> None:
         if s:
@@ -114,28 +129,14 @@ class _Accum:
             self.last_char = s[-1]
 
     def append_normalised(self, s: str) -> None:
-        # flattened hot path of append_normalised(chunk, s, last_is_ws())
-        if _cnorm is not None:
-            try:
-                s = _cnorm(s, self.last_char in _ACTUAL_WS)
-            except UnicodeEncodeError:  # lone surrogates: regex path
-                s = self._norm_py(s)
-        else:
-            s = self._norm_py(s)
-        if s:
-            self.parts.append(s)
-            self.last_char = s[-1]
+        self.append(_norm(s, self.last_char in _ACTUAL_WS))
 
-    def _norm_py(self, s: str) -> str:
-        if _INVIS_RE.search(s):
-            s = _INVIS_RE.sub("", s)
-        s = _WS_RUN.sub(" ", s)
-        if s and s[0] == " " and self.last_char in _ACTUAL_WS:
-            s = s[1:]
-        return s
-
-    def value(self) -> str:
-        return "".join(self.parts)
+    def take(self) -> str:
+        """The accumulated text stripped of _TRIM; empties the accumulator."""
+        text = "".join(self.parts).strip(_TRIM)
+        self.parts = []
+        self.last_char = ""
+        return text
 
 
 def _preserves_ws(doc: Doc, node: int) -> bool:
@@ -176,16 +177,93 @@ def _traverse(doc: Doc, root: int):
             stack.pop()
 
 
+def _walk_py(doc: Doc, root: int, media: bool):
+    """The Element.text() walk over root's subtree.
+
+    Without ``media`` it returns the normalized text stripped of _TRIM;
+    media elements are ordinary elements there, their fallback content
+    contributes. With ``media`` it returns the span list: each img/video/
+    object below root flushes the text so far as a span, adds its media
+    span and skips its subtree (the fallback content).
+
+    A single non-recursive DFS; the stack frame carries the child cursor so
+    tail-boundary next-sibling checks are O(1), and open preserve-whitespace
+    elements are tracked by depth (≤6-level rule) instead of ancestor walks.
+    """
+    spans: list[tuple] = []
+    accum = _Accum()
+    kind = doc.kind
+    tagv = doc.tag
+    textv = doc.text
+    children = doc.children
+    stack: list[list] = [[root, 0]]
+    pre_depths: list[int] = []
+    while stack:
+        frame = stack[-1]
+        node, ci = frame
+        kids = children[node]
+        if ci == 0:
+            k = kind[node]
+            if k == dom.TEXT:
+                t = textv[node] or ""
+                # parent depth minus nearest preserve-element depth ≤5
+                # == the reference's 6-level lookup (Element.kt:1885-1898)
+                if pre_depths and (len(stack) - 2) - pre_depths[-1] < 6:
+                    accum.append(t)
+                else:
+                    accum.append_normalised(t)
+            elif k == dom.CDATA:
+                accum.append(textv[node] or "")
+            elif k == dom.ELEMENT:
+                tag = tagv[node] or ""
+                if media and tag in MEDIA_KIND and node != root:
+                    text = accum.take()
+                    if text:
+                        spans.append(("text", text, None, len(spans)))
+                    spans.append((MEDIA_KIND[tag], None,
+                                  _span_ref(doc, node, tag), len(spans)))
+                    stack.pop()
+                    continue
+                if accum.parts and (tag in BLOCK_TAGS or tag == "br") \
+                        and not accum.last_is_ws():
+                    accum.append(" ")
+                if tag in PRESERVE_WS_TAGS:
+                    pre_depths.append(len(stack) - 1)
+        if ci < len(kids):
+            frame[1] = ci + 1
+            stack.append([kids[ci], 0])
+            continue
+        # tail
+        stack.pop()
+        if kind[node] == dom.ELEMENT:
+            if pre_depths and pre_depths[-1] == len(stack):
+                pre_depths.pop()
+            if (tagv[node] or "") in BLOCK_TAGS and stack \
+                    and not accum.last_is_ws():
+                pframe = stack[-1]
+                pkids = children[pframe[0]]
+                if pframe[1] < len(pkids):
+                    nxt = pkids[pframe[1]]
+                    nk = kind[nxt]
+                    if nk == dom.TEXT or nk == dom.CDATA or (
+                        nk == dom.ELEMENT
+                        and not format_as_block(tagv[nxt] or "")
+                    ):
+                        accum.append(" ")
+    text = accum.take()
+    if not media:
+        return text
+    if text:
+        spans.append(("text", text, None, len(spans)))
+    return spans
+
+
 def element_text(doc: Doc, root: int) -> str:
     """Element.text(): normalized combined text of root's subtree.
 
-    Single non-recursive DFS; the stack frame carries the child cursor so
-    tail-boundary next-sibling checks are O(1), and open preserve-whitespace
-    elements are tracked by depth (≤6-level rule) instead of ancestor walks.
-
-    Hot path: the C mirror (py_element_text in _ctok_src.c) runs the whole
-    DFS; the Python loop below stays the semantics reference and the
-    fallback (lone-surrogate text can't view as UTF-8).
+    Hot path: the C walk (py_element_text in _ctok_src.c); any C-side
+    failure (lone-surrogate text can't view as UTF-8) falls back to
+    _walk_py.
     """
     if _ctext is not None:
         try:
@@ -196,60 +274,7 @@ def element_text(doc: Doc, root: int) -> str:
 
 
 def _element_text_py(doc: Doc, root: int) -> str:
-    accum = _Accum()
-    kind = doc.kind
-    tag = doc.tag
-    text = doc.text
-    children = doc.children
-    stack: list[list] = [[root, 0]]
-    pre_depths: list[int] = []
-    while stack:
-        frame = stack[-1]
-        node = frame[0]
-        ci = frame[1]
-        kids = children[node]
-        if ci == 0:
-            k = kind[node]
-            if k == dom.TEXT:
-                t = text[node] or ""
-                # parent depth minus nearest preserve-element depth ≤5
-                # == the reference's 6-level lookup (Element.kt:1885-1898)
-                if pre_depths and (len(stack) - 2) - pre_depths[-1] < 6:
-                    accum.append(t)
-                else:
-                    accum.append_normalised(t)
-            elif k == dom.CDATA:
-                accum.append(text[node] or "")
-            elif k == dom.ELEMENT:
-                tg = tag[node]
-                if accum.parts and (tg in BLOCK_TAGS or tg == "br") \
-                        and not accum.last_is_ws():
-                    accum.append(" ")
-                if tg in PRESERVE_WS_TAGS:
-                    pre_depths.append(len(stack) - 1)
-        if ci < len(kids):
-            frame[1] = ci + 1
-            stack.append([kids[ci], 0])
-            continue
-        # tail
-        stack.pop()
-        k = kind[node]
-        if k == dom.ELEMENT:
-            tg = tag[node]
-            if pre_depths and pre_depths[-1] == len(stack):
-                pre_depths.pop()
-            if tg in BLOCK_TAGS and stack and not accum.last_is_ws():
-                pframe = stack[-1]
-                pkids = children[pframe[0]]
-                if pframe[1] < len(pkids):
-                    nxt = pkids[pframe[1]]
-                    nk = kind[nxt]
-                    if nk == dom.TEXT or nk == dom.CDATA or (
-                        nk == dom.ELEMENT
-                        and not format_as_block(tag[nxt] or "")
-                    ):
-                        accum.append(" ")
-    return accum.value().strip(_TRIM)
+    return _walk_py(doc, root, False)
 
 
 def whole_text(doc: Doc, root: int) -> str:
@@ -275,7 +300,7 @@ def own_text(doc: Doc, root: int) -> str:
             _append_text_node(doc, accum, c)
         elif k == dom.ELEMENT and doc.tag[c] == "br" and not accum.last_is_ws():
             accum.append(" ")
-    return accum.value().strip(_TRIM)
+    return accum.take()
 
 
 def whole_own_text(doc: Doc, root: int) -> str:
@@ -314,9 +339,6 @@ def doc_title(doc: Doc) -> str:
 # span emission (the flagship extraction operator)
 # ---------------------------------------------------------------------------
 
-_cspans = c_function("extract_spans")
-
-
 def extract_spans(doc: Doc, root: int | None = None) -> list[tuple]:
     """Emit the ordered (kind, text, media_ref, offset) span sequence.
 
@@ -325,13 +347,12 @@ def extract_spans(doc: Doc, root: int | None = None) -> list[tuple]:
     DOM positions. Media descendants' fallback content (inside video/object)
     is skipped; refs resolve via absUrl against the doc base URI.
 
-    Hot path: the C mirror in _ctok_src.c (py_extract_spans) runs the DFS
-    and returns media spans carrying node ids; refs are resolved here
-    (absUrl + <video><source> fallback). A typical page has a few media
-    spans, each a plain relative path against an http(s) ``<base href>``:
-    ``dom.resolve_url`` joins those by string slicing, and urljoin runs
-    only for the rest. Any C-side failure falls back to the pure-Python
-    DFS below.
+    Hot path: the C walk (py_extract_spans in _ctok_src.c) returns media
+    spans carrying node ids; refs are resolved here (absUrl + <video>
+    <source> fallback). A typical page has a few media spans, each a plain
+    relative path against an http(s) ``<base href>``: ``dom.resolve_url``
+    joins those by string slicing, and urljoin runs only for the rest. Any
+    C-side failure falls back to _walk_py.
     """
     if root is None:
         root = doc.body()
@@ -343,153 +364,15 @@ def extract_spans(doc: Doc, root: int | None = None) -> list[tuple]:
         try:
             raw = _cspans(doc.kind, doc.tag, doc.text, doc.children, root)
         except Exception:
-            raw = None
-        if raw is not None:
-            kind = doc.kind
-            tagv = doc.tag
-            children = doc.children
-            for i, sp in enumerate(raw):
-                mk = sp[0]
-                if mk == "text":
-                    continue
+            return _extract_spans_py(doc, root)
+        for i, sp in enumerate(raw):
+            if sp[0] != "text":
                 node = sp[2]
-                tag = tagv[node] or ""
-                ref = _media_ref(doc, node, _MEDIA_REF_ATTR[tag])
-                if not ref and tag == "video":
-                    for c in children[node]:
-                        if kind[c] == dom.ELEMENT and tagv[c] == "source":
-                            r2 = _media_ref(doc, c, "src")
-                            if r2:
-                                ref = r2
-                                break
-                raw[i] = (mk, None, ref or "", sp[3])
-            return raw
+                raw[i] = (sp[0], None,
+                          _span_ref(doc, node, doc.tag[node] or ""), sp[3])
+        return raw
     return _extract_spans_py(doc, root)
 
 
 def _extract_spans_py(doc: Doc, root: int) -> list[tuple]:
-    spans: list[tuple] = []
-    accum = _Accum()
-    is_text = (dom.TEXT, dom.CDATA)
-
-    def flush() -> None:
-        text = accum.value().strip(_TRIM)
-        accum.parts = []
-        accum.last_char = ""
-        if text:
-            spans.append(("text", text, None, len(spans)))
-
-    skip_under = -1
-    skip_depth = 0
-    kind = doc.kind
-    tagv = doc.tag
-    textv = doc.text
-    children = doc.children
-    stack: list[list] = [[root, 0]]
-    pre_depths: list[int] = []
-    while stack:
-        frame = stack[-1]
-        node = frame[0]
-        ci = frame[1]
-        kids = children[node]
-        if ci == 0 and skip_under == -1:
-            k = kind[node]
-            if k == dom.TEXT:
-                t = textv[node] or ""
-                if pre_depths and (len(stack) - 2) - pre_depths[-1] < 6:
-                    accum.append(t)
-                else:
-                    accum.append_normalised(t)
-            elif k == dom.CDATA:
-                accum.append(textv[node] or "")
-            elif k == dom.ELEMENT:
-                tag = tagv[node] or ""
-                mk = MEDIA_KIND.get(tag)
-                if mk is not None and node != root:
-                    flush()
-                    ref_attr = _MEDIA_REF_ATTR[tag]
-                    ref = _media_ref(doc, node, ref_attr)
-                    if not ref and tag == "video":
-                        # fall back to first <source src>
-                        for c in kids:
-                            if kind[c] == dom.ELEMENT and tagv[c] == "source":
-                                ref = _media_ref(doc, c, "src")
-                                if ref:
-                                    break
-                    spans.append((mk, None, ref or "", len(spans)))
-                    skip_under = node  # don't descend into fallback content
-                    skip_depth = len(stack)
-                else:
-                    if accum.parts and (tag in BLOCK_TAGS or tag == "br") \
-                            and not accum.last_is_ws():
-                        accum.append(" ")
-                    if tag in PRESERVE_WS_TAGS:
-                        pre_depths.append(len(stack) - 1)
-        if ci < len(kids):
-            frame[1] = ci + 1
-            child = kids[ci]
-            if not children[child]:
-                # leaf fast path: head+tail inline, no frame push (half of
-                # all nodes are text leaves — saves an alloc + 2 iterations
-                # each). Semantics identical: childless nodes can't be
-                # preserve-ws ancestors, and a childless media element's
-                # skip_under set/clear is a no-op.
-                if skip_under == -1:
-                    ck = kind[child]
-                    if ck == dom.TEXT:
-                        t = textv[child] or ""
-                        if pre_depths and \
-                                (len(stack) - 1) - pre_depths[-1] < 6:
-                            accum.append(t)
-                        else:
-                            accum.append_normalised(t)
-                    elif ck == dom.CDATA:
-                        accum.append(textv[child] or "")
-                    elif ck == dom.ELEMENT:
-                        tag = tagv[child] or ""
-                        mk = MEDIA_KIND.get(tag)
-                        if mk is not None:
-                            flush()
-                            ref = _media_ref(doc, child, _MEDIA_REF_ATTR[tag])
-                            spans.append((mk, None, ref or "", len(spans)))
-                        else:
-                            if accum.parts and (tag in BLOCK_TAGS
-                                                or tag == "br") \
-                                    and not accum.last_is_ws():
-                                accum.append(" ")
-                            if tag in BLOCK_TAGS \
-                                    and not accum.last_is_ws() \
-                                    and ci + 1 < len(kids):
-                                nxt = kids[ci + 1]
-                                nk = kind[nxt]
-                                if nk in is_text or (
-                                    nk == dom.ELEMENT
-                                    and not format_as_block(tagv[nxt] or "")
-                                ):
-                                    accum.append(" ")
-                continue
-            stack.append([child, 0])
-            continue
-        # tail
-        stack.pop()
-        if skip_under == node and len(stack) == skip_depth - 1:
-            skip_under = -1
-        elif skip_under == -1:
-            k = kind[node]
-            if k == dom.ELEMENT:
-                if pre_depths and pre_depths[-1] == len(stack):
-                    pre_depths.pop()
-                if (tagv[node] or "") in BLOCK_TAGS and stack \
-                        and not accum.last_is_ws():
-                    pframe = stack[-1]
-                    pkids = children[pframe[0]]
-                    if pframe[1] < len(pkids):
-                        nxt = pkids[pframe[1]]
-                        nk = kind[nxt]
-                        if nk in is_text or (
-                            nk == dom.ELEMENT
-                            and not format_as_block(tagv[nxt] or "")
-                        ):
-                            accum.append(" ")
-    flush()
-    return spans
+    return _walk_py(doc, root, True)

@@ -33,7 +33,6 @@ from .tags import (
     P_CLOSERS as _P_CLOSERS,
     SPECIAL_TAGS,
     TABLE_SCOPE as _TABLE_SCOPE,
-    TABLE_SECTION_STARTS as _TABLE_SECTION_STARTS,
     VOID_TAGS,
 )
 from .ctokenizer import CTokenizer, make_tokenizer, tree_module
@@ -223,69 +222,18 @@ class HtmlTreeBuilder:
               track_positions: bool = False) -> Doc:
         self.parse_setup(html, base_uri, track_errors, settings,
                          track_positions)
-        # inlined parse_step loop: one fewer Python call per token on the
-        # hot path (~40k tokens for the 448KB benchmark page); parse_step
-        # itself stays for the incremental StreamParser surface
-        process = self.process
+        mod = None
         if type(self.tok) is CTokenizer and self.perrs is None \
                 and not self.src_track \
                 and not self.settings.preserve_tag_case \
                 and not self.settings.preserve_attribute_case:
             mod = tree_module()
-            if mod is not None:
-                self._parse_ctree(mod)
-                if self.perrs is not None:
-                    self.doc.parse_errors = list(self.perrs)
-                self._finalize_positions()
-                return self.doc
-        next_batch = getattr(self.tok, "next_batch", None)
-        if next_batch is not None:
-            # C tokenizer: iterate whole batches (state-switch-candidate
-            # tags are always batch-final, so process() updates tok.state
-            # before the next batch is cut). The two dominant token shapes
-            # — text and generic (non-special) start tags in body-equivalent
-            # modes — are dispatched flat here, replicating exactly the
-            # process() → mode handler → _in_body fall-through those tokens
-            # would take (text: _in_cell/_in_caption delegate anything-else
-            # to _in_body which routes text to _in_body_text; generic start:
-            # _in_body_start's not-in-_INBODY_SPECIAL_START branch). Every
-            # precondition that picks a different branch — foreign content,
-            # self-closing flag, special names (incl. all rawtext/RCDATA
-            # state-switch tags), table-section names in cell/caption — falls
-            # through to process(). Cuts 3-4 Python frames per token on the
-            # hot path.
-            in_body_text = self._in_body_text
-            norm_attrs = self.norm_attrs
-            reconstruct = self.reconstruct_formatting
-            insert_element = self.insert_element
-            special_start = _INBODY_SPECIAL_START
-            table_starts = _TABLE_SECTION_STARTS
-            body_modes = (IN_BODY, IN_CELL, IN_CAPTION)
-            while True:
-                toks, done = next_batch()
-                for tok in toks:
-                    if not self.has_foreign:
-                        k = tok[0]
-                        mode = self.mode
-                        if k == "text":
-                            if mode in body_modes:
-                                self._cur_tok = tok
-                                in_body_text(tok[1])
-                                continue
-                        elif k == "start" and not tok[3] \
-                                and mode in body_modes:
-                            name = tok[1].lower()
-                            if name not in special_start and (
-                                    mode == IN_BODY
-                                    or name not in table_starts):
-                                self._cur_tok = tok
-                                reconstruct()
-                                insert_element(name, norm_attrs(tok[2]))
-                                continue
-                    process(tok)
-                if done:
-                    break
+        if mod is not None:
+            self._parse_ctree(mod)
         else:
+            # parse_step's loop, inlined (parse_step itself stays for the
+            # incremental StreamParser surface)
+            process = self.process
             tok_next = self.tok.next_token
             while True:
                 tok = tok_next()
@@ -329,7 +277,7 @@ class HtmlTreeBuilder:
                 html, bp, tok.state, tok.rawtext_tag, shared, self)
             # C always returns in DATA; bail-token handlers may set the
             # rawtext/RCDATA state for the next entry (same contract as
-            # CTokenizer.next_batch)
+            # CTokenizer.next_token's batches)
             tok.state = TOK_DATA
             tok.rawtext_tag = None
             if toks:

@@ -1,18 +1,23 @@
-"""Differential parity: C span extractor vs the pure-Python DFS.
+"""Differential parity: the C text walk vs the pure-Python one.
 
-The C mirror (py_extract_spans in _ctok_src.c) must emit byte-identical span
-sequences to textops._extract_spans_py on every document shape the corpus and
-the fuzz campaign's tag soup exercise — media interleave, pre depth rules,
-block boundary spaces, CDATA, entities, deep nesting.
+The C walk (text_walk in _ctok_src.c, behind extract_spans and element_text)
+must emit byte-identical span sequences to textops._extract_spans_py and
+identical text to textops._element_text_py on every document shape the
+corpus and the fuzz campaign's tag soup exercise — media interleave, pre
+depth rules, block boundary spaces, CDATA, entities, deep nesting. The C
+whitespace normalizer (norm_ws) must equal textops._norm_ws_py on any string.
 """
 
 from __future__ import annotations
 
+import hypothesis.strategies as st
 import pytest
+from hypothesis import given, settings
 
 from ksoup_spark.kernel import dom
 from ksoup_spark.kernel.ctokenizer import c_function
-from ksoup_spark.kernel.textops import _extract_spans_py, extract_spans
+from ksoup_spark.kernel.textops import (
+    _extract_spans_py, _norm_ws_py, extract_spans)
 from ksoup_spark.kernel.treebuilder import parse
 
 pytestmark = pytest.mark.skipif(c_function("extract_spans") is None,
@@ -44,6 +49,10 @@ CASES = [
     "<pre><div><div><div><div><div><div><div>  deep: normalized?  "
     "</div></div></div></div></div></div></div></pre>",
     "<textarea>  rc\ndata  </textarea>",
+    # text whose parent is 5 and 6 levels below a pre: the edge of the
+    # 6-level raw rule
+    "<pre>" + "<i>" * 5 + "  five  up  " + "</i>" * 5 + "</pre>",
+    "<pre>" + "<i>" * 6 + "  six  up  " + "</i>" * 6 + "</pre>",
     "<p>a&nbsp;&nbsp;b</p>",
     "<p>a&#x200b;b&shy;c</p>",
     "<p>x</p> <span>y</span>",
@@ -128,3 +137,25 @@ def test_element_text_corpus_page_parity(corpus_pages, soup_pages):
             if d.kind[node] == dom.ELEMENT:
                 assert T.element_text(d, node) == \
                     T._element_text_py(d, node), (html[:80], node)
+
+
+# spaces, tabs, CR, LF, FF, nbsp, the two invisibles (U+200B, U+00AD),
+# ASCII letters and CJK
+_WS_TEXT = st.text(alphabet=st.sampled_from(
+    list(" \t\r\n\f\u00a0\u200b\u00ad") + list("abcXYZ") + list("中文字")),
+    max_size=40)
+
+
+@given(_WS_TEXT, st.booleans())
+@settings(max_examples=500, deadline=None)
+def test_norm_ws_matches_python(s, strip_leading):
+    assert c_function("norm_ws")(s, strip_leading) == \
+        _norm_ws_py(s, strip_leading)
+
+
+@pytest.mark.parametrize("s", ["", " ", "\t\r\n\f", "\u00a0 \u00a0",
+                               "\u200b\u00ad", " \u200b "])
+@pytest.mark.parametrize("strip_leading", [False, True])
+def test_norm_ws_matches_python_on_blank_input(s, strip_leading):
+    assert c_function("norm_ws")(s, strip_leading) == \
+        _norm_ws_py(s, strip_leading)

@@ -6,17 +6,21 @@ the document preamble and postamble, InBody/InCell/InCaption/Text and the
 table modes — mutating the same lists the Python builder owns, and bails
 everything else back to Python. These tests pin WHOLE-TREE
 equality (every parallel node list + errors + doc fields) between a parse
-with the engine on and one with KSOUP_SPARK_NO_CTREE=1, across the
+with the engine on and one with it off, across the
 sf0.01 corpus pages, fixed-seed slices of the fuzz campaign's tag soup and
 page-shaped documents, and targeted cases for every C-handled branch.
+The engine is switched off by patching treebuilder.tree_module to return
+None: KSOUP_SPARK_NO_CTREE is read once per process, so setting it here
+would not take effect.
 """
 
 from __future__ import annotations
 
-import os
+from unittest import mock
 
 import pytest
 
+from ksoup_spark.kernel import treebuilder
 from ksoup_spark.kernel.ctokenizer import tree_module
 from ksoup_spark.kernel.treebuilder import parse
 
@@ -34,14 +38,15 @@ def _table(d):
     }
 
 
+def python_tree():
+    """Context in which parse() runs the pure-Python tree builder."""
+    return mock.patch.object(treebuilder, "tree_module", lambda: None)
+
+
 def parse_both(html: str, base_uri: str = ""):
-    assert "KSOUP_SPARK_NO_CTREE" not in os.environ
     d1 = parse(html, base_uri)
-    os.environ["KSOUP_SPARK_NO_CTREE"] = "1"
-    try:
+    with python_tree():
         d2 = parse(html, base_uri)
-    finally:
-        del os.environ["KSOUP_SPARK_NO_CTREE"]
     t1, t2 = _table(d1), _table(d2)
     if t1 != t2:
         for k in t1:
@@ -254,7 +259,6 @@ def _bench_page(i: int) -> str:
 def test_bench_docs_stay_in_c(monkeypatch):
     """A benchmark-shaped doc is one tree_run call and no Python process()
     call: the preamble, the body and the postamble all run in C."""
-    from ksoup_spark.kernel import treebuilder
     from ksoup_spark.kernel.textops import extract_spans
 
     mod = tree_module()
@@ -328,11 +332,8 @@ def test_tree_parity_spans_and_text():
             "<table><tr><td>cell<video src='v.mp4'></video></td></tr>"
             "</table><pre>  raw\n</pre></div>")
     d1 = parse(html)
-    os.environ["KSOUP_SPARK_NO_CTREE"] = "1"
-    try:
+    with python_tree():
         d2 = parse(html)
-    finally:
-        del os.environ["KSOUP_SPARK_NO_CTREE"]
     assert extract_spans(d1) == extract_spans(d2)
     assert element_text(d1, d1.body()) == element_text(d2, d2.body())
 
