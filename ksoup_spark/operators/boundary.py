@@ -10,8 +10,7 @@ logic (parse, select, text, serialize):
 
 1. decode each Arrow input column to Python values, reading NULL as the
    type's empty value ("" / b"" / []), so a NULL document and an empty one
-   give the same output (list<struct> columns, such as the extraction
-   kernel's ``spans``, decode from their flattened child arrays);
+   give the same output;
 2. call the per-document function once per row;
 3. encode its results as one Arrow array per output column per batch, with
    the Arrow types derived from the Spark schema (``to_arrow_schema``), so
@@ -98,36 +97,10 @@ def _empty(t: pa.DataType):
 def _values(col: pa.Array) -> list:
     """``col`` as Python values, NULL read as the type's empty value."""
     t = col.type
-    if (pa.types.is_list(t) or pa.types.is_large_list(t)) \
-            and pa.types.is_struct(t.value_type):
-        return _struct_lists(col)
     empty = _empty(t)
     if col.null_count and empty is not None:
         col = pc.fill_null(col, pa.scalar(empty, type=t))
     return col.to_pylist()
-
-
-def _struct_lists(col: pa.Array) -> list:
-    """A list<struct> column as lists of dicts, built from the child arrays:
-    one ``to_pylist`` per struct field, zipped into per-element dicts and cut
-    by the list offsets. Same values as ``to_pylist`` with NULL lists read as
-    ``[]`` (a NULL struct element stays None), at about half its cost on the
-    flagship kernel's ``spans`` input. ``ListArray.values`` ignores a slice's
-    offset, so the children are cut by the (slice-aware) offsets."""
-    offs = col.offsets.to_pylist()
-    base = offs[0]
-    items = col.values.slice(base, offs[-1] - base)
-    names = [f.name for f in col.type.value_type]
-    fields = [items.field(i).to_pylist() for i in range(len(names))]
-    rows = [dict(zip(names, r)) for r in zip(*fields)]
-    if items.null_count:
-        for i in pc.indices_nonzero(items.is_null()).to_pylist():
-            rows[i] = None
-    out = [rows[a - base:b - base] for a, b in zip(offs, offs[1:])]
-    if col.null_count:
-        for i in pc.indices_nonzero(col.is_null()).to_pylist():
-            out[i] = []
-    return out
 
 
 def map_docs(df: DataFrame, schema: StructType, fn: Callable,

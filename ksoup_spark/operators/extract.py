@@ -1,14 +1,18 @@
 """Core extraction operators: interleaved docs -> ordered span sequences,
 and HTML -> exploded node table.
 
-Physical plan (SURVEY.md §4): read -> salted repartition on hash(doc_id)
-(defuses giant-document skew by scattering rows uniformly; one doc is one
-row, so skew is row-size skew, not key skew) -> extract kernel (a
-mapInArrow behind boundary.map_docs) -> columnar spans. No per-row Python
-at the Spark boundary: the kernel receives Arrow record batches and returns
-Arrow record batches; the per-document parse loop runs inside the batch
-(the same document-at-a-time model as the reference, Parser.kt:13-14 —
-parallelism lives BETWEEN documents).
+Physical plan (SURVEY.md §4): read -> plan-side assembly (``assembled_html``,
+one Spark SQL expression that turns the interleaved input spans into the
+HTML payload) -> salted repartition on hash(doc_id) (defuses giant-document
+skew by scattering rows uniformly; one doc is one row, so skew is row-size
+skew, not key skew) -> extract kernel (``extract_spans_from_html``, html in
+and spans out, a mapInArrow behind boundary.map_docs) -> columnar spans.
+The kernel is the only per-document Python: it receives Arrow record batches
+of one string column and returns Arrow record batches; the per-document
+parse loop runs inside the batch (the same document-at-a-time model as the
+reference, Parser.kt:13-14 — parallelism lives BETWEEN documents). The
+per-doc counts the pipeline commits (``span_counts``) are plan expressions
+over the kernel's output too.
 
 At 100 TB scale: extraction is embarrassingly parallel (no shuffle needed
 beyond the optional salting pass and, in the resumable pipeline
@@ -21,7 +25,7 @@ balloon executor memory.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -74,33 +78,67 @@ NODE_TABLE_TEXT_SCHEMA = StructType(
     NODE_TABLE_SCHEMA.fields + [StructField("elem_text", StringType())]
 )
 
-_MEDIA_TAG = {"image": "img", "video": "video", "object": "object"}
+# media kind -> the markup around its (escaped) ref
+_MEDIA_HTML = {"image": ('<img src="', '">'),
+               "video": ('<video src="', '"></video>'),
+               "object": ('<object data="', '"></object>')}
 
 
 def assemble_html(spans: list) -> str:
-    """Interleaved input spans -> one HTML payload.
+    """Interleaved input spans -> one HTML payload: the reference that
+    ``assembled_html``, which the program runs, is tested against.
 
     Text-kind spans ('html'/'text') concatenate in offset order; media spans
     become media elements at their stream position (the "interleaved
-    placeholders resolved against DOM positions" contract).
+    placeholders resolved against DOM positions" contract), with ``&`` and
+    ``"`` escaped so the parser reads the ref back unchanged. NULL elements
+    and spans of other kinds add nothing.
     """
     parts: list[str] = []
-    for s in sorted(spans, key=lambda x: x["offset"] if x["offset"] is not None else 0):
+    for s in sorted(filter(None, spans),
+                    key=lambda x: x["offset"] if x["offset"] is not None else 0):
         kind = s["kind"]
         if kind in ("html", "text"):
             parts.append(s["text"] or "")
-        else:
-            tag = _MEDIA_TAG.get(kind)
-            if tag is None:
-                continue
-            ref = s["media_ref"] or ""
-            if tag == "object":
-                parts.append(f'<object data="{ref}"></object>')
-            elif tag == "video":
-                parts.append(f'<video src="{ref}"></video>')
-            else:
-                parts.append(f'<img src="{ref}">')
+        elif kind in _MEDIA_HTML:
+            head, tail = _MEDIA_HTML[kind]
+            ref = (s["media_ref"] or "").replace("&", "&amp;") \
+                .replace('"', "&quot;")
+            parts.append(head + ref + tail)
     return "".join(parts)
+
+
+def assembled_html(spans: str = "spans") -> Column:
+    """``assemble_html`` as one Spark SQL expression over the input spans
+    column named ``spans``, so the payload is built in the plan and the
+    kernel reads one string column. NULL elements are dropped, the sort key
+    (offset, NULL as 0; then position in the list) keeps ties in input
+    order, and a NULL list gives ''. One SQL string, so building it is one
+    JVM call."""
+    ref = ("replace(replace(coalesce(s.media_ref, ''), '&', '&amp;'), "
+           "'\"', '&quot;')")
+    media = " ".join(f"WHEN s.kind = '{k}' THEN concat('{head}', {ref}, "
+                     f"'{tail}')" for k, (head, tail) in _MEDIA_HTML.items())
+    piece = (f"CASE WHEN s.kind IN ('html', 'text') THEN coalesce(s.text, '') "
+             f"{media} ELSE '' END")
+    keyed = (f"transform(array_compact({spans}), (s, i) -> "
+             f"struct(coalesce(s.offset, 0) AS o, i AS i, {piece} AS p))")
+    return F.expr(f"coalesce(array_join(sort_array({keyed}).p, ''), '')")
+
+
+# per-doc counts over an output spans column, as Spark SQL: spans, code
+# points of non-NULL text (Spark's ``length``), and spans whose kind is not
+# "text". Lambda-free, so they run as generated code.
+SPAN_COUNTS = {
+    "n_spans": "size({})",
+    "n_text_chars": "length(array_join({}.text, ''))",
+    "n_media": "size(array_remove({}.kind, 'text'))",
+}
+
+
+def span_counts(spans: str = "spans") -> dict[str, Column]:
+    """``SPAN_COUNTS`` over the column named ``spans``."""
+    return {n: F.expr(sql.format(spans)) for n, sql in SPAN_COUNTS.items()}
 
 
 def spans_to_rows(spans: list[tuple]) -> list[dict]:
@@ -111,6 +149,7 @@ def spans_to_rows(spans: list[tuple]) -> list[dict]:
 
 
 def extract_spans_from_html(html: str, base_uri: str = "") -> list[dict]:
+    """The flagship kernel: one HTML payload -> its output spans."""
     return spans_to_rows(_kernel_extract_spans(_parse(html, base_uri)))
 
 
@@ -124,12 +163,11 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None,
 
 
 def extract_spans_df(docs: DataFrame, repartition: int | None = None) -> DataFrame:
-    """(doc_id, spans<input>) -> (doc_id, spans<output>) via Arrow kernel."""
-    docs = docs.select("doc_id", "spans")
-    if repartition:
-        docs = salted_repartition(docs, repartition)
-    return map_docs(docs, SPANS_SCHEMA,
-                    lambda s: extract_spans_from_html(assemble_html(s)))
+    """(doc_id, spans<input>) -> (doc_id, spans<output>): the payload is
+    assembled in the plan, then the kernel runs on it."""
+    return extract_spans_from_html_df(
+        docs.select("doc_id", assembled_html("spans").alias("html")),
+        repartition=repartition)
 
 
 def extract_spans_from_html_df(docs: DataFrame, html_col: str = "html",

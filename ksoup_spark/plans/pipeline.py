@@ -7,14 +7,14 @@ run id). A rerun reads the metrics table and processes only the partitions
 it has no row for — a crashed 100 TB job resumes where it stopped.
 
 One pass is one Spark job: the spans write (plus AQE's map stage). The
-kernel emits per-doc counts next to its spans, the rows are rebalanced by
-partition so each write task writes one file per partition, and an
-``Observation`` above the rebalance sums the counts in the write's result
-stage. The driver then writes the commit rows itself: one parquet file per
-batch, built with pyarrow and renamed into the metrics directory through
-Hadoop's ``FileSystem`` (per-file statistics gathered at write time and
-committed in a record the driver writes straight to storage, as Delta Lake
-does). Nothing re-reads the written files, and the todo list comes from the
+kernel's map stage projects per-doc counts of its spans
+(``extract.span_counts``), the rows are rebalanced by partition so each
+write task writes one file per partition, and an ``Observation`` above the
+rebalance sums the counts in the write's result stage. The driver then
+writes the commit rows itself: one parquet file per batch, built with
+pyarrow and renamed into the metrics directory through Hadoop's
+``FileSystem`` (per-file statistics gathered at write time and committed in
+a record the driver writes straight to storage, as Delta Lake does). Nothing re-reads the written files, and the todo list comes from the
 metrics table alone, never from a job over the input.
 
 Storage is parquet directories (an Iceberg catalog slots in by swapping
@@ -41,10 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel.textops import extract_spans
-from ..kernel.treebuilder import parse
+from ..operators import extract
 from ..operators.boundary import map_docs
-from ..operators.extract import SPANS_SCHEMA, assemble_html, spans_to_rows
 
 METRICS_SCHEMA = StructType(
     [
@@ -58,29 +56,6 @@ METRICS_SCHEMA = StructType(
         StructField("completed_at", DoubleType()),
     ]
 )
-
-# per-doc counts the kernel emits next to `spans`; summed per partition at
-# write time and dropped before the write
-COUNTS = ("n_spans", "n_text_chars", "n_media")
-COUNTED_SPANS_SCHEMA = StructType(
-    SPANS_SCHEMA.fields + [StructField(c, LongType()) for c in COUNTS]
-)
-
-
-def extract_counted_spans(spans: list) -> tuple:
-    """One doc's output spans plus the counts its commit row sums:
-    spans, code points of non-NULL text (Spark's ``length``), and spans
-    whose kind is not "text" — counted in one pass over the kernel's span
-    tuples, before they become row dicts."""
-    raw = extract_spans(parse(assemble_html(spans)))
-    n_chars = n_media = 0
-    for kind, text, _, _ in raw:
-        if text is not None:
-            n_chars += len(text)
-        if kind != "text":
-            n_media += 1
-    return spans_to_rows(raw), len(raw), n_chars, n_media
-
 
 def with_part(docs: DataFrame, num_parts: int) -> DataFrame:
     """Deterministic logical partition id from the doc id (salted hash)."""
@@ -115,19 +90,23 @@ def observed_spans(docs: DataFrame, batch: list[int],
     ``docs`` carries ``part``. The kernel output is rebalanced by ``part``
     so a write task holds whole partitions and writes one file each (AQE
     splits an oversized partition into files of the advisory size). The
-    per-part sums sit above the rebalance, in the write's result stage,
-    where Spark applies each successful task's update exactly once."""
+    per-doc counts are projected below it, in the kernel's map stage; their
+    per-part sums sit above it, in the write's result stage, where Spark
+    applies each successful task's update exactly once. The kernel is
+    looked up when the plan is built."""
     part = F.col("part")
-    batch_docs = docs.filter(part.isin(batch)).select("doc_id", "spans")
-    counted = with_part(
-        map_docs(batch_docs, COUNTED_SPANS_SCHEMA, extract_counted_spans),
-        num_parts)
+    html = docs.filter(part.isin(batch)) \
+        .select("doc_id", extract.assembled_html("spans").alias("html"))
+    spans = map_docs(html, extract.SPANS_SCHEMA,
+                     extract.extract_spans_from_html)
+    counted = with_part(spans, num_parts).select(
+        "*", *(c.alias(n) for n, c in extract.span_counts().items()))
     obs = Observation()
     sums = [F.count(F.when(part == p, 1)).alias(f"n_docs_{p}") for p in batch]
     sums += [F.sum(F.when(part == p, F.col(c))).alias(f"{c}_{p}")
-             for p in batch for c in COUNTS]
+             for p in batch for c in extract.SPAN_COUNTS]
     spans = counted.hint("rebalance", "part").observe(obs, *sums) \
-        .drop(*COUNTS)
+        .drop(*extract.SPAN_COUNTS)
     return spans, obs
 
 
@@ -202,7 +181,7 @@ def run_extraction_pipeline(
         now = time.time()
         rows = [
             (p, run_id, got[f"n_docs_{p}"],
-             *(got[f"{c}_{p}"] for c in COUNTS), wall, now)
+             *(got[f"{c}_{p}"] for c in extract.SPAN_COUNTS), wall, now)
             for p in batch if got[f"n_docs_{p}"]
         ]
         if rows:

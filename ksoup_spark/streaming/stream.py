@@ -16,9 +16,10 @@ from ..operators.boundary import column_fn
 from ..operators.extract import (
     SPANS_SCHEMA,
     SPANS_TYPE,
-    assemble_html,
+    assembled_html,
     extract_spans_df,
     extract_spans_from_html,
+    span_counts,
 )
 
 DOCS_SCHEMA = ", ".join(f"{f.name} {f.dataType.simpleString()}"
@@ -62,10 +63,13 @@ def start_extraction_stream(
 
 
 def extract_spans_col():
-    """Column-level extraction UDF (spans-in -> spans-out), for plans that
-    must keep sibling columns (e.g. event time in streaming) without a join."""
-    return column_fn(SPANS_TYPE,
-                     lambda s: extract_spans_from_html(assemble_html(s)))
+    """Column-level extraction (spans-in column -> spans-out column), for
+    plans that must keep sibling columns (e.g. event time in streaming)
+    without a join. Call the result with the input column's name: the
+    payload is assembled in the plan and the kernel runs as a column
+    function on it."""
+    kernel = column_fn(SPANS_TYPE, extract_spans_from_html)
+    return lambda spans: kernel(assembled_html(spans))
 
 
 def span_metrics_stream(docs_stream: DataFrame,
@@ -76,8 +80,9 @@ def span_metrics_stream(docs_stream: DataFrame,
 
     Shape: column-level extraction (keeps the event-time column, no
     stream-stream join) -> watermark -> tumbling-window aggregate of
-    doc/span/media counts. Late documents beyond the watermark are dropped
-    (bounded state); 'append' mode emits a window once finalized.
+    doc/span/media counts (the pipeline's ``span_counts``). Late documents
+    beyond the watermark are dropped (bounded state); 'append' mode emits a
+    window once finalized.
     """
     from pyspark.sql import functions as F
 
@@ -86,15 +91,14 @@ def span_metrics_stream(docs_stream: DataFrame,
         "doc_id",
         extract_spans_col()("spans").alias("spans"),
     )
+    counts = span_counts("spans")
     return (
         extracted.withWatermark(event_time_col, watermark)
         .groupBy(F.window(F.col(event_time_col), window_duration))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size("spans")).alias("n_spans"),
-            F.sum(
-                F.size(F.filter("spans", lambda s: s["kind"] != "text"))
-            ).alias("n_media_spans"),
+            F.sum(counts["n_spans"]).alias("n_spans"),
+            F.sum(counts["n_media"]).alias("n_media_spans"),
         )
     )
 

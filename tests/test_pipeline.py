@@ -200,6 +200,7 @@ import json, sys
 
 from pyspark import TaskContext
 
+from ksoup_spark.operators import extract
 from ksoup_spark.plans import pipeline
 from ksoup_spark.session import get_spark
 from ksoup_spark.sources.corpus import build_docs_table
@@ -212,17 +213,17 @@ spark = get_spark(app="pipeline-retry", master="local[2,2]",
                   shuffle_partitions=2, arrow_batch=16)
 sc = spark.sparkContext
 docs = build_docs_table(spark, sf_dir).select("doc_id", "spans")
-real = pipeline.extract_counted_spans
+real = extract.extract_spans_from_html
 seen = {}
 
 
-def fail_once(spans):
+def fail_once(html):
     ctx = TaskContext.get()
     if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
         n = seen[ctx.taskAttemptId()] = seen.get(ctx.taskAttemptId(), 0) + 1
         if n > 300:
             raise RuntimeError("injected first-attempt failure")
-    return real(spans)
+    return real(html)
 
 
 def run(name, frame):
@@ -242,7 +243,7 @@ def run(name, frame):
 
 
 out = {"clean": run("clean", docs)}
-pipeline.extract_counted_spans = fail_once
+extract.extract_spans_from_html = fail_once
 out["retried"] = run("retried", docs)
 spark.stop()
 print("RESULT " + json.dumps(out))

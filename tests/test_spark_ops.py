@@ -639,24 +639,25 @@ def test_pipeline_kernel_runs_once_per_doc(spark, tmp_path):
     recomputed by re-running the lineage, so the extraction kernel executes
     exactly once per document per batch (the old spans.groupBy re-ran the
     whole lineage a second time)."""
+    from ksoup_spark.operators import extract as ex
     from ksoup_spark.plans import pipeline as pl
 
     acc = spark.sparkContext.accumulator(0)
-    real = pl.extract_counted_spans
+    real = ex.extract_spans_from_html
 
-    def spy(spans):
+    def spy(html):
         acc.add(1)
-        return real(spans)
+        return real(html)
 
     docs = build_docs_table(spark, SF_DIR).select("doc_id", "spans").limit(40)
     n = docs.count()
-    pl.extract_counted_spans = spy
+    ex.extract_spans_from_html = spy
     try:
         pl.run_extraction_pipeline(
             spark, docs, str(tmp_path / "spans"), str(tmp_path / "metrics"),
             num_parts=4, parts_per_batch=2)
     finally:
-        pl.extract_counted_spans = real
+        ex.extract_spans_from_html = real
     assert acc.value == n, f"kernel executed {acc.value}x for {n} docs"
 
 
